@@ -6,9 +6,20 @@ indexes raw OCR without boilerplate stripping; SURVEY.md §2.9
 Deterministic text-density heuristic in the spirit of the public Arc90
 Readability and jusText algorithms (Pomikálek 2011): score block elements by
 text length and link density; keep content blocks; join with a single space.
-Implemented on stdlib html.parser (no lxml in this container). One canonical
-Python function, used both by the Spark pandas UDF (Arrow-batched) and by the
-per-document test oracle, so span-sequence equality is exact by construction.
+Implemented on stdlib html.parser (no lxml in this container).
+
+Two tokenizers drive ONE set of classification handlers (`_ContentParser`):
+ - the spec, `extract_main_content`: stdlib `HTMLParser` over any input.
+   The per-document test oracle (`oracle_extracted_spans`) calls it, so the
+   oracle never depends on the fast path;
+ - the fast path, `_fast_main_content`: one regex over a strict HTML subset
+   (text, whitelisted start tags with quoted attributes, plain end tags,
+   ASCII whitespace inside tags). Anything outside the subset returns None
+   and that one input re-runs on the spec. Only `extract_main_content_batch`
+   (the Spark Arrow UDF's entry) tries it.
+Span-sequence equality between Spark and the oracle is exact because the
+fast path is property-tested against the spec
+(tests/test_html_classifier.py), not because both run the same tokenizer.
 
 Spec (the function IS the spec — deterministic by construction):
  - block elements: p, h1..h6, li, td, th, blockquote, pre, article, section,
@@ -28,6 +39,7 @@ Spec (the function IS the spec — deterministic by construction):
 from __future__ import annotations
 
 import re
+from html import unescape
 from html.parser import HTMLParser
 
 _WS = re.compile(r"\s+")
@@ -130,9 +142,9 @@ class _ContentParser(HTMLParser):
             self.a_depth = max(0, self.a_depth - 1)
         if tag in BLOCK_TAGS and self.blocks:
             b = self.blocks.pop()
-            text = _norm("".join(b.text))
             if b.has_nested_block or b.weight < 0:
                 return
+            text = _norm("".join(b.text))
             link_text = _norm("".join(b.link_text))
             min_chars = (
                 MIN_POSITIVE_CHARS if b.weight > 0 else MIN_BLOCK_CHARS
@@ -173,9 +185,70 @@ def extract_main_content(html: str, dom_weights: bool = False) -> str:
     return " ".join(parser.kept)
 
 
+# Fast-path tag whitelist. Every other name (script/style, which HTMLParser
+# reads as CDATA, and title/textarea, which newer CPython reads as RCDATA)
+# sends the document to the spec.
+_FAST_TAGS = BLOCK_TAGS | _VOID_TAGS | frozenset(
+    ["a", "html", "body", "head", "header", "footer", "nav", "main", "aside",
+     "span", "b", "i", "u", "s", "em", "strong", "small", "big", "sub",
+     "sup", "code", "kbd", "samp", "var", "abbr", "cite", "dfn", "q", "mark",
+     "font", "center", "ul", "ol", "dl", "dt", "dd", "table", "thead",
+     "tbody", "tfoot", "tr", "caption", "figure", "figcaption", "label"]
+)
+# One token per match, alternatives tried in order:
+#  text  — a run up to the next markup `<`; a `<` not followed by
+#          [A-Za-z/!?] is text to HTMLParser too;
+#  start — <name (ws attr ws* = ws* "v"|'v')* ws* > ;
+#  end   — </name ws* > ;
+#  bad   — any other `<`: the document is outside the subset.
+# Every position matches some alternative, so findall's tuples tile the
+# document (findall builds no match objects, about half the cost of
+# finditer here).
+# Whitespace inside tags is the ASCII set only: HTMLParser's \s is Unicode,
+# but its tag name runs through NBSP and friends (`<p\xa0class="x">` is one
+# tag named 'p\xa0class="x"'), so this subset stays out of that corner.
+_WS_TAG = r"[ \t\n\r\f]"
+_FAST_TOKEN = re.compile(
+    r"(?P<text>(?:[^<]|<(?![A-Za-z/!?]))[^<]*(?:<(?![A-Za-z/!?])[^<]*)*)"
+    r"|<(?P<start>[A-Za-z][A-Za-z0-9]*)"
+    rf"(?:{_WS_TAG}+[A-Za-z_:][-A-Za-z0-9_:.]*{_WS_TAG}*={_WS_TAG}*"
+    r"(?:\"[^\"]*\"|'[^']*'))*"
+    rf"{_WS_TAG}*>"
+    rf"|</(?P<end>[A-Za-z][A-Za-z0-9]*){_WS_TAG}*>"
+    r"|(?P<bad><)"
+)
+
+
+def _fast_main_content(html: str) -> str | None:
+    """`extract_main_content(html)` for documents inside the fast-path
+    subset (module docstring); None for any other document. Drives the
+    spec's handlers directly, so only tokenization differs from the spec."""
+    parser = _ContentParser()
+    for text, start, end, bad in _FAST_TOKEN.findall(html):
+        if text:
+            parser.handle_data(unescape(text))
+            continue
+        if bad:
+            return None
+        tag = (start or end).lower()
+        if tag not in _FAST_TAGS:
+            return None
+        if start:
+            parser.handle_starttag(tag, [])
+        else:
+            parser.handle_endtag(tag)
+    return " ".join(parser.kept)
+
+
 def extract_main_content_batch(texts, dom_weights: bool = False) -> list[str]:
-    """Vectorized form over a sequence (used inside pandas UDFs)."""
-    return [extract_main_content(t, dom_weights) for t in texts]
+    """Vectorized form over a sequence (the Spark UDF's entry): each text
+    takes the fast path when it fits the subset, else the spec. dom_weights
+    needs attributes, which the fast path does not parse."""
+    out = []
+    for t in texts:
+        fast = None if dom_weights or not t else _fast_main_content(t)
+        out.append(extract_main_content(t, dom_weights) if fast is None else fast)
+    return out
 
 
 class _MetadataParser(HTMLParser):

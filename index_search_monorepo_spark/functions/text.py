@@ -5,13 +5,16 @@ These reproduce, bit-exactly, the string semantics of the reference's
 `:10-24` (xmlesc), and `app/ht_indexer/src/document_generator/
 mysql_data_extractor.py:26-38` (namespace/id split) — but as JVM-side Catalyst
 expressions so they run inside whole-stage codegen, never in Python, on the
-100 TB hot path. The Python oracles live in
+100 TB hot path (one Python twin, `string_preparation`, serves text that is
+already inside a Python worker). The Python oracles live in
 `index_search_monorepo_spark/oracle/reference_oracle.py` and the parity tests
 in `tests/test_text.py` (including Hypothesis round-trips vs CPython's
 `xml.sax.saxutils.quoteattr`).
 """
 
 from __future__ import annotations
+
+from xml.sax.saxutils import quoteattr
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -99,6 +102,13 @@ def string_preparation_expr(col: Column) -> Column:
     s = F.translate(col, "\r\n", "  ")
     # CR/LF were just replaced, so quoteattr's &#10;/&#13; passes are no-ops
     return quoteattr_expr(pystrip(s), crlf_possible=False)
+
+
+def string_preparation(s: str) -> str:
+    """Python twin of `string_preparation_expr`, for text that is already
+    in a Python worker (the html classifier's Arrow UDF prepares its own
+    output instead of handing it back to an interpreted JVM lambda)."""
+    return quoteattr(s.replace("\r", " ").replace("\n", " ").strip())
 
 
 def xmlesc_expr(col: Column) -> Column:

@@ -323,7 +323,15 @@ def decontaminate(
     materialization (r6; the with_adaptive_quality stats_df convention).
     spread=False skips the internal round-robin repartition when the
     caller passes an already-spread (or many-split) frame, so one
-    exchange serves every consumer of that frame."""
+    exchange serves every consumer of that frame. hits_only=True carries
+    no `contaminated` flag, so it refuses any min_hits other than 1
+    rather than ignore it: the caller applies its own threshold to
+    n_contaminated_shingles."""
+    if hits_only and min_hits != 1:
+        raise ValueError(
+            f"decontaminate(hits_only=True) has no contaminated flag; "
+            f"min_hits={min_hits} would be ignored"
+        )
     # r6: persist the distinct benchmark-shingle frame — benchmark
     # suites are bounded (MBs), and unpersisted every materialization
     # replays the benchmark scan + explode + distinct before the

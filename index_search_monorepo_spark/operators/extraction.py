@@ -2,9 +2,10 @@
 (doc_id string, spans array<struct<kind,text,media_ref,offset>>).
 
 Design (SURVEY.md §7): pure column expressions > higher-order array functions
-> pandas UDFs; the per-document work is *per-row array work* — zero shuffles
+> Arrow UDFs; the per-document work is *per-row array work* — zero shuffles
 on the default path. The only Python stage is the html boilerplate classifier
-(lxml, unavoidable), Arrow-batched.
+(stdlib html.parser), one Arrow UDF over pyarrow arrays that also prepares the
+html text it returns.
 
 Scale notes (100 TB):
  - A1 ocr concat is embarrassingly row-parallel; no groupBy, no join.
@@ -18,10 +19,11 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -31,7 +33,10 @@ from pyspark.sql.types import (
 )
 
 from index_search_monorepo_spark.functions.html import extract_main_content_batch
-from index_search_monorepo_spark.functions.text import string_preparation_expr
+from index_search_monorepo_spark.functions.text import (
+    string_preparation,
+    string_preparation_expr,
+)
 
 SPAN_STRUCT = StructType(
     [
@@ -146,12 +151,22 @@ def with_ocr_skew_aware(
     return small.unionByName(big_joined)
 
 
-@pandas_udf(ArrayType(StringType()))
-def _clean_html_batch(html_texts: pd.Series) -> pd.Series:
-    """Arrow-batched boilerplate strip: array<string> -> array<string>,
-    positionally aligned with the input html spans of each document."""
-    return html_texts.map(
-        lambda arr: extract_main_content_batch(list(arr) if arr is not None else [])
+@arrow_udf(ArrayType(StringType()))
+def _clean_html_batch(html_texts: pa.Array) -> pa.Array:
+    """Boilerplate strip + string_preparation: array<string> ->
+    array<string>, positionally aligned with the input html spans of each
+    document; a null document array yields an empty one.
+
+    The whole batch is classified as one flat list. Offsets are rebuilt
+    from the list lengths, never taken from `.offsets`/`.values`, which
+    ignore a sliced batch's offset and the sub-lists behind null slots."""
+    cleaned = extract_main_content_batch(pc.list_flatten(html_texts).to_pylist())
+    lengths = pc.list_value_length(html_texts).fill_null(0)
+    offsets = pa.concat_arrays(
+        [pa.array([0], pa.int32()), pc.cumulative_sum(lengths)]
+    )
+    return pa.ListArray.from_arrays(
+        offsets, pa.array([string_preparation(c) for c in cleaned], pa.string())
     )
 
 
@@ -161,6 +176,8 @@ def extracted_spans_expr(spans: Column, cleaned_html: Column) -> Column:
       txt  -> string_preparation(text)      (text_processor.py:27-41)
       html -> string_preparation(main_content(text))   [net-new classifier]
       img  -> ''                             (media resolved by reference only)
+    `cleaned_html` is `_clean_html_batch`'s output: html text already
+    classified AND prepared, aligned with the html spans.
     """
     txt = F.transform(
         _txt_spans(spans),
@@ -177,7 +194,7 @@ def extracted_spans_expr(spans: Column, cleaned_html: Column) -> Column:
         cleaned_html,
         lambda s, t: F.struct(
             s["kind"].alias("kind"),
-            string_preparation_expr(t).alias("text"),
+            t.alias("text"),
             s["media_ref"].alias("media_ref"),
             s["offset"].alias("offset"),
         ),
@@ -195,8 +212,8 @@ def extracted_spans_expr(spans: Column, cleaned_html: Column) -> Column:
 
 
 def with_extracted_spans(df: DataFrame, spans_col: str = "spans") -> DataFrame:
-    """Adds `extracted_spans`. One pandas-UDF stage for html; everything else
-    JVM-side. No shuffle.
+    """Adds `extracted_spans`. One Arrow-UDF stage classifies and prepares
+    the html text; everything else is JVM-side. No shuffle.
 
     The UDF result is bound inside ONE expression via the single-element-
     transform trick (CLAUDE.md lesson #1) rather than an intermediate
@@ -223,7 +240,7 @@ def explode_noinline(col: str | Column) -> Column:
     """explode() that blocks the optimizer from inlining the defining
     expression of `col` into the Generate node.
 
-    When the exploded column is expensive (a pandas-UDF-derived array like
+    When the exploded column is expensive (an Arrow-UDF-derived array like
     `extracted_spans`), CollapseProject inlines it into Generate (single
     lexical reference) and InferFiltersFromGenerate then copies the whole
     generator expression into an inferred pre-filter — after python-UDF

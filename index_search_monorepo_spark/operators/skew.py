@@ -60,7 +60,15 @@ def spread_small_scan(df: DataFrame, key: str | None = "doc_id") -> DataFrame:
     retry-determinism guard) that the deterministic key makes unnecessary
     — measured 0.35 s -> 0.26 s on a 50k-doc spread (r6) — and is the
     retry-safe form the round-robin sort exists to approximate. Falls
-    back to round-robin when the key column is absent."""
+    back to round-robin when the key column is absent.
+
+    xxhash64(NULL) is the hash seed, so NULL keys would all land in ONE
+    partition; a NULL key hashes its row's monotonically_increasing_id
+    instead (row-unique, and deterministic for a given input split
+    order). Non-null keys keep their hash. Catalyst counts that id as
+    nondeterministic, so a filter above the spread now stops at the
+    Project computing it — still below the exchange, but no longer
+    pushed into the parquet scan."""
     spark = df.sparkSession
     try:
         n = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -69,7 +77,11 @@ def spread_small_scan(df: DataFrame, key: str | None = "doc_id") -> DataFrame:
     if df.rdd.getNumPartitions() >= n:
         return df
     if key and key in df.columns:
-        return df.repartition(n, F.pmod(F.xxhash64(key), F.lit(100 * n)))
+        k = F.col(key)
+        h = F.when(k.isNull(), F.xxhash64(F.monotonically_increasing_id()))
+        return df.repartition(
+            n, F.pmod(h.otherwise(F.xxhash64(k)), F.lit(100 * n))
+        )
     return df.repartition(n)
 
 

@@ -7,6 +7,7 @@ on local[N]:
    (multi-MB OCR strings; SURVEY.md §4 physical notes)
  - shuffle partitions sized to cores locally; on a real cluster this is set per
    job from input size / target partition bytes.
+ - driver heap sized to the host (SPARK_DRIVER_MEMORY overrides it).
 """
 
 from __future__ import annotations
@@ -14,6 +15,24 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_MAX_DRIVER_GB = 16
+
+
+def driver_memory() -> str:
+    """spark.driver.memory: $SPARK_DRIVER_MEMORY, else half the host's
+    physical memory in whole GiB (at least 1, at most 16). In local mode
+    the driver JVM is also every executor and shares the host with the
+    Python workers, so a fixed 16g would promise more heap than a
+    small host has."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    try:
+        host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return f"{_MAX_DRIVER_GB}g"
+    return f"{max(1, min(_MAX_DRIVER_GB, host // 2**31))}g"
 
 
 def get_spark(
@@ -49,7 +68,7 @@ def get_spark(
         # that is per-corpus, so callers set it via extra_conf (bench
         # workers use 16, matching the synthetic corpora's row groups).
         .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         # keep stdout/stderr free of \r-progress frames: bench.py's artifact
         # protocol is line-oriented JSON and the driver captures raw output

@@ -5,6 +5,7 @@ for textstats (CLAUDE.md lesson #1)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from index_search_monorepo_spark.operators import dedup as D
@@ -280,9 +281,9 @@ class TestScaleGuards:
         assert out[(1, 1)] == 0 and out[(1, 2)] == 0
 
     def test_group_expansion_matches_self_join(self, spark):
-        """via='group' (r6 default: one band-frame pass, in-bucket pair
-        expansion) must emit exactly the pair set of the via='join'
-        equality self-join."""
+        """via='group' (opt-in alternative to the via='join' default: one
+        band-frame pass, in-bucket pair expansion) must emit exactly the
+        pair set of the via='join' equality self-join."""
         docs = _docs(spark)
         g = {
             (r["doc_a"], r["doc_b"])
@@ -469,6 +470,12 @@ class TestDecontaminate:
         }
         for did, r in doc_grain.items():
             assert hits.get(did, 0) == r["n_contaminated_shingles"], did
+
+    def test_hits_only_refuses_min_hits(self, spark):
+        docs = _docs(spark)
+        bench = docs.filter(F.col("doc_id") % 97 == 0).select("text")
+        with pytest.raises(ValueError, match="min_hits=2"):
+            D.decontaminate(docs, bench, min_hits=2, hits_only=True)
 
     def test_corpus_never_shuffles_on_benchmark_join(self, spark):
         """With a small benchmark the corpus-side shingle explode must hit

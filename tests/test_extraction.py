@@ -3,10 +3,13 @@ fields, skew-aware path equivalence, error sink."""
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import functions as F
 
+from index_search_monorepo_spark.functions.html import extract_main_content
 from index_search_monorepo_spark.operators.errors import split_errors
 from index_search_monorepo_spark.operators.extraction import (
+    _clean_html_batch,
     with_extracted_spans,
     with_mets_fields,
     with_ocr,
@@ -16,6 +19,7 @@ from index_search_monorepo_spark.oracle.reference_oracle import (
     oracle_extracted_spans,
     oracle_mets_fields,
     oracle_ocr,
+    oracle_string_preparation,
 )
 
 
@@ -119,6 +123,60 @@ class TestSpanSequence:
             == expected[r["doc_id"]]
         )
         assert n_match == len(expected)
+
+    def test_arrow_udf_batch_edges(self):
+        """The Arrow UDF returns, per document, string_preparation of each
+        html text's main content: null document array -> [], null html
+        text -> '""'. Batches may be sliced and may hold null slots backed
+        by non-empty sub-lists; neither may leak values into a
+        neighbour."""
+        body = "<p>" + "enough words to pass the block length check " + "</p>"
+        values = pa.array(
+            [body, "junk", None, "<p>x\r\ny</p>", "<p>\t" + body, "<p"]
+        )
+        # slots: [body, junk] | null over [None, crlf] | [] | [tab-body, <p]
+        full = pa.ListArray.from_arrays(
+            pa.array([0, 2, 4, 4, 6], pa.int32()),
+            values,
+            mask=pa.array([False, True, False, False]),
+        )
+
+        def expected(arrow_lists):
+            return [
+                [
+                    oracle_string_preparation(extract_main_content(t))
+                    for t in (arr or [])
+                ]
+                for arr in arrow_lists.to_pylist()
+            ]
+
+        for batch in (full, full.slice(1), full.slice(1, 2), full.slice(4)):
+            got = _clean_html_batch.func(batch)
+            assert got.type == pa.list_(pa.string())
+            assert got.null_count == 0
+            assert got.to_pylist() == expected(batch)
+        assert _clean_html_batch.func(full).to_pylist()[0] == [
+            '"enough words to pass the block length check"', '""'
+        ]
+
+    def test_null_spans_and_null_html_text(self, spark):
+        rows = spark.createDataFrame(
+            [
+                ("a", None),
+                ("b", []),
+                ("c", [("html", None, "H1", 1), ("txt", " x\r\n", "T1", 1)]),
+            ],
+            "doc_id string, spans array<struct<kind:string,text:string,"
+            "media_ref:string,offset:int>>",
+        )
+        got = {
+            r["doc_id"]: r["extracted_spans"]
+            for r in with_extracted_spans(rows).collect()
+        }
+        assert got["a"] is None and got["b"] == []
+        assert [tuple(s) for s in got["c"]] == [
+            ("txt", '"x"', "T1", 1), ("html", '""', "H1", 1)
+        ]
 
 
 class TestMets:

@@ -1,15 +1,22 @@
 """Spec tests for the boilerplate classifier (functions/html.py) — the
-north-rule net-new capability. The function doubles as the test oracle for
-span-sequence equality, so its behavior is pinned here directly."""
+north-rule net-new capability. The spec function doubles as the test oracle
+for span-sequence equality, so its behavior is pinned here directly, and
+the regex fast path the Spark UDF takes is property-tested against it."""
 
 from __future__ import annotations
+
+import random
+
+from hypothesis import given, settings, strategies as st
 
 from index_search_monorepo_spark.functions.html import (
     MAX_LINK_DENSITY,
     MIN_BLOCK_CHARS,
+    _fast_main_content,
     extract_main_content,
     extract_main_content_batch,
 )
+from index_search_monorepo_spark.sources.synthetic import _html_text
 
 CONTENT = "This is a long enough paragraph of real article content to keep."
 NAVBAR = '<div><a href="/">Home</a> <a href="/x">About</a> <a href="/y">More</a></div>'
@@ -68,6 +75,73 @@ def test_whitespace_normalized():
     html = f"<p>Lots   of\n\nwhitespace   inside this long enough block here.</p>"
     want = " ".join(messy.split())
     assert extract_main_content(html) == want
+
+
+# ------------------------------------------------- fast path vs the spec
+
+_MARKUP = st.sampled_from([
+    "<p>", "</p>", "<div>", "</div>", "<h2>", "</h2>", "<li>", "</li>",
+    "<span>", "</span>", "<b>", "</b>", "<html>", "<body>", "</body>",
+    "<P>", "</P >", "</ p>", "<DIV>", "</Div\n>", "<br>", "<br/>",
+    '<a href="/x">', "</a>", "<A HREF='/y'>", "</A>", '<img src="i.png">',
+    '<p class="main text">', "<div id='nav' >", '<p\tdata-x = "a>b">',
+    "<p class=x>", "<div id=nav>", "<input disabled>",
+    '<p\xa0class="x">', "</p\xa0>", "<p\x0b>", "<p\x00>", "<p-x>",
+    "<!-- note -->", "<!--<p>hidden text inside a comment block</p>-->",
+    "<!DOCTYPE html>", "<![CDATA[x < y]]>", "<?xml version='1.0'?>", "</>",
+    "<script>var s = '<p>';</script>", "<style>p { color: red }</style>",
+    "<title>a title</title>", "<textarea><p>typed</p></textarea>",
+    "<script>", "</script>", "<style>", "<title>", "<textarea>",
+    "<p", '<div class="x', "<unknown>", "</unknown>",
+])
+_TEXT = st.sampled_from([
+    "plain words of ordinary article text ",
+    "a fairly long sentence that passes the minimum block length ",
+    "&amp;", "&copy", "&copy;", "&#x41;", "&#0;", "&", " & ", "&notit; ",
+    "&#", "&#x;", "<", " < ", "<3", "a<", "\xa0", "\x0b", "\x00", "\n",
+    "\t", "  ", "\r\n",
+])
+_HTML_DOCS = st.lists(st.one_of(_MARKUP, _TEXT), max_size=40).map("".join)
+
+
+@settings(max_examples=1000, deadline=None)
+@given(_HTML_DOCS)
+def test_fast_path_matches_spec(html):
+    """Zero mismatches: wherever the fast path answers, it answers exactly
+    what HTMLParser does; the batch entry (fast path or fallback) always
+    equals the spec."""
+    fast = _fast_main_content(html)
+    assert fast is None or fast == extract_main_content(html)
+    assert extract_main_content_batch([html]) == [extract_main_content(html)]
+
+
+def test_fast_path_subset_boundary():
+    inside = [
+        f'<P class="a" id=\'b\'>{CONTENT} &amp; &copy &#x41; 1 < 2</P >',
+        f"<div><p>{CONTENT}</p>\xa0<a href='/'>x</a></div><br><img src=\"i\">",
+        f"<ul><li><b>{CONTENT}</b></li></ul> trailing < text &",
+        "",
+    ]
+    for html in inside:
+        assert _fast_main_content(html) == extract_main_content(html)
+    outside = [
+        f"<!-- c --><p>{CONTENT}</p>", "<!DOCTYPE html>", "<?pi?>", "<br/>",
+        "</ p>", "<p class=x>", '<p\xa0class="x">', "<p\x0b>",
+        "<script>x</script>", "<style>", "<title>", "<textarea>", "<p",
+        "<unknown>",
+    ]
+    for html in outside:
+        assert _fast_main_content(html) is None, html
+
+
+def test_synthetic_html_takes_fast_path():
+    """Every html span the synthetic corpora generate stays on the fast
+    path — a fallback here would silently give back the UDF speed-up."""
+    rng = random.Random(0)
+    for _ in range(300):
+        html = _html_text(rng)
+        fast = _fast_main_content(html)
+        assert fast is not None and fast == extract_main_content(html)
 
 
 # --------------------------------------------------------- DOM weights (r5)

@@ -90,6 +90,29 @@ def test_salted_repartition_explicit_count(spark, tables):
     assert df.rdd.getNumPartitions() == 6
 
 
+def test_spread_small_scan_null_keys_spread(spark):
+    """NULL keys must not share one hash (xxhash64(NULL) is the seed):
+    they spread over several partitions, and a non-null key keeps the
+    partition of its plain xxhash64 spread."""
+    from index_search_monorepo_spark.operators.skew import spread_small_scan
+
+    df = spark.range(400).select(
+        F.when(F.col("id") % 4 == 0, F.col("id").cast("string")).alias("k"),
+        "id",
+    ).coalesce(1)
+    parts = spread_small_scan(df, key="k").select(
+        "k", "id", F.spark_partition_id().alias("p")
+    ).collect()
+    assert len(parts) == 400
+    assert len({r["p"] for r in parts if r["k"] is None}) > 1
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    plain = df.repartition(
+        n, F.pmod(F.xxhash64("k"), F.lit(100 * n))
+    ).select("k", F.spark_partition_id().alias("p"))
+    want = {r["k"]: r["p"] for r in plain.collect() if r["k"] is not None}
+    assert {r["k"]: r["p"] for r in parts if r["k"] is not None} == want
+
+
 class TestKeySkewReport:
     def test_hand_exact_and_salt_math(self, spark):
         rows = [(k,) for k in ["hot"] * 95 + ["warm"] * 10 + ["cold"] * 2]

@@ -73,17 +73,23 @@ def test_span_sequence_classifier_runs_once(spark, tables):
     """Exploding the UDF-derived extracted_spans must NOT duplicate the
     classifier into an inferred Generate pre-filter: exactly one
     ArrowEvalPython stage (explode_noinline guard; a plain explode yields
-    two, i.e. the pandas UDF runs twice per row)."""
+    two, i.e. the Arrow UDF runs twice per row). The stage is the scalar
+    arrow_udf over pyarrow arrays, not a pandas UDF."""
+    from pyspark.util import PythonEvalType
+
     from index_search_monorepo_spark.operators.extraction import (
+        _clean_html_batch,
         explode_noinline,
         with_extracted_spans,
     )
 
+    assert _clean_html_batch.evalType == PythonEvalType.SQL_SCALAR_ARROW_UDF
     out = with_extracted_spans(tables["documents_spans"]).select(
         "doc_id", explode_noinline("extracted_spans").alias("s")
     )
     plan = _plan(out)
     assert plan.count("ArrowEvalPython") == 1, plan
+    assert "_clean_html_batch" in plan, plan
 
     plain = with_extracted_spans(tables["documents_spans"]).select(
         "doc_id", F.explode("extracted_spans").alias("s")

@@ -16,6 +16,7 @@ from index_search_monorepo_spark.functions.text import (
     namespace_expr,
     object_id_expr,
     quoteattr_expr,
+    string_preparation,
     string_preparation_expr,
     strip_leading_zeros_expr,
     xmlesc_expr,
@@ -58,6 +59,8 @@ class TestStringPreparation:
         got = _run_expr(spark, TRICKY, string_preparation_expr)
         want = [oracle_string_preparation(v) for v in TRICKY]
         assert got == want
+        # the Python twin the html Arrow UDF applies
+        assert [string_preparation(v) for v in TRICKY] == want
 
     @settings(max_examples=30, deadline=None)
     @given(
@@ -76,6 +79,7 @@ class TestStringPreparation:
         got = _run_expr(spark, values, string_preparation_expr)
         want = [oracle_string_preparation(v) for v in values]
         assert got == want
+        assert [string_preparation(v) for v in values] == want
 
 
 class TestQuoteattr:
