@@ -6,10 +6,14 @@ metrics, replacing the reference's MySQL tracktable
 Model: the corpus is bucketed by pmod(xxhash64(doc_id), n_buckets). One run
 processes a set of pending buckets IN ONE SPARK JOB (never a driver loop over
 buckets), writes output partitioned by bucket, then atomically appends one
-manifest row per bucket:
+manifest row per bucket that received documents:
 
     (bucket, input_snapshot_id, n_docs, span_count, status,
      processed_at, error)
+
+The per-bucket counts ride the write itself as an Observation (fixed-width
+arrays indexed by bucket), so the output is computed once and nothing is
+cached.
 
 Resume = broadcast anti-join of input buckets against completed manifest rows
 (J8/T1, `set(list_ids) - set(processed_ids)`). Idempotent like the
@@ -25,7 +29,7 @@ import time
 import uuid
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST_DIR = "_checkpoints"
@@ -74,43 +78,55 @@ def run_checkpointed(
     output_dir: str,
     input_snapshot_id: str,
     spark: SparkSession,
+    n_buckets: int,
     span_count_col: str = "span_count",
 ) -> dict:
-    """Write `df_bucketed` (must carry `bucket` and a per-row span-count
-    column) partitioned by bucket, then append the manifest atomically
-    (tmp-file + rename). Returns run metrics."""
+    """Write `df_bucketed` (must carry `bucket` in [0, n_buckets) and a
+    per-row span-count column) partitioned by bucket, then append the
+    manifest atomically (tmp-file + rename). Returns run metrics.
+
+    Per-bucket n_docs/span_count come from an Observation on the write: two
+    arrays of n_buckets aggregates each, so their cost grows with
+    n_buckets per row (200k rows into a noop sink on a 4-vCPU host,
+    JIT-warm: +0.4 s at 64 buckets, +27 s at 1024). Against extraction's
+    ~200 ms of task time per document that is noise at doc grain; it is
+    the wrong tool for fine-grained rows."""
     out = Path(output_dir)
     out.mkdir(parents=True, exist_ok=True)
-    df_bucketed = df_bucketed.persist()
-    try:
-        (
-            df_bucketed.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(str(out / "data"))
+    bucket = F.col("bucket")
+    obs = Observation("checkpoint")
+    (
+        df_bucketed.observe(
+            obs,
+            F.array(*[F.count_if(bucket == i) for i in range(n_buckets)]).alias(
+                "n_docs"
+            ),
+            F.array(
+                *[
+                    F.sum(F.when(bucket == i, F.col(span_count_col)).otherwise(0))
+                    for i in range(n_buckets)
+                ]
+            ).alias("span_count"),
         )
-        stats = (
-            df_bucketed.groupBy("bucket")
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum(F.col(span_count_col)).alias("span_count"),
-            )
-            .collect()
-        )
-    finally:
-        df_bucketed.unpersist()
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket")
+        .parquet(str(out / "data"))
+    )
+    stats = obs.get
     now = time.strftime("%Y-%m-%d %H:%M:%S")
     manifest_rows = [
         {
-            "bucket": int(r["bucket"]),
+            "bucket": b,
             "input_snapshot_id": input_snapshot_id,
-            "n_docs": int(r["n_docs"]),
-            "span_count": int(r["span_count"]),
+            "n_docs": n,
+            "span_count": spans,
             "status": "completed",
             "processed_at": now,
             "error": None,
         }
-        for r in stats
+        for b, (n, spans) in enumerate(zip(stats["n_docs"], stats["span_count"]))
+        if n > 0
     ]
     mdir = out / MANIFEST_DIR
     mdir.mkdir(exist_ok=True)

@@ -1,7 +1,9 @@
-"""J1–J4 — MySQL-style enrichment rebuilt as broadcast left joins
+"""J1–J4 — MySQL-style enrichment rebuilt as four left joins on doc_id
 (mysql_data_extractor.py:45-116). The reference runs 4 point queries per
-document; at 100 TB these become four broadcast-hash joins against small,
-pre-aggregated dimension DataFrames — zero shuffles on the fact side.
+document; here they become one join chain against pre-aggregated,
+doc_id-keyed dimension DataFrames: broadcast-hash by default (zero shuffles
+on the fact side), or shuffle-hash/merge under a `dim_join` hint when the
+dims are too large to broadcast (one fact-side exchange on doc_id).
 
 Semantics preserved exactly:
  - rights          emitted only when EXACTLY ONE rights_current row matches
@@ -24,8 +26,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
-
-from index_search_monorepo_spark.functions.text import namespace_expr, object_id_expr
 
 MAX_ITEM_IDS = 1000
 
@@ -68,91 +68,43 @@ def with_mysql_fields(
     mb_coll_item: DataFrame,
     mb_collection: DataFrame,
     doc_id_col: str = "doc_id",
-    persist_dims: bool = True,
     dim_join: str | None = None,
 ) -> DataFrame:
-    """All four enrichments as left joins; adds columns
+    """All four enrichments as left joins on doc_id; adds columns
     rights, ht_heldby, ht_heldby_brlm, coll_id.
 
-    persist_dims pins the once-per-job dim-build semantic: on a real run the
-    four pre-aggregates are built once; without persist a caller that
-    materializes the output k times rebuilds them k times (at small scale
-    that near-serial rebuild dominates high-core wall time).
+    dim_join: join-strategy hint for the four dims ("shuffle_hash" |
+    "merge"); None broadcasts them (one-shot jobs at bench scale). These
+    dims are DOC-CARDINALITY — rights_current is one row per volume (~17M
+    at reference scale), holdings one per volume-member — so in production
+    they cannot broadcast, and a repeated-run deployment pays the
+    driver-side broadcast build on every materialization, a serial cost
+    that grows with the corpus (r5 sf1 scaling fit: s = 23.2 s at 120k
+    docs vs 2.0 s at 12k). Under a shuffle hint the fact side exchanges
+    ONCE on doc_id and every dim join (and the downstream doc_id-keyed
+    metadata joins) reuses that partitioning.
 
-    dim_join (r6): join-strategy hint ("shuffle_hash" | "merge") for the
-    four dims. Default None keeps the broadcast plan (one-shot jobs at
-    bench scale). But these dims are DOC-CARDINALITY — rights_current is
-    one row per volume (~17M at reference scale), holdings one per
-    volume-member — so in production they cannot broadcast, and in any
-    repeated-run deployment the per-materialization driver-side broadcast
-    hash-relation build is a SERIAL cost that grows with the corpus (the
-    r5 sf1 scaling run's corpus-proportional serial term: s = 23.2 s at
-    120k docs vs 2.0 s at 12k). With a hint, all four dims join
-    shuffle-hash on doc_id — the fact side exchanges ONCE on doc_id and
-    every dim join (and the downstream doc_id-keyed metadata joins)
-    reuses that partitioning, so the dim build parallelizes instead of
-    serializing on the driver. The rights dim is re-keyed to
-    doc_id = concat(namespace, '.', id), exactly equivalent to the
-    (namespace, object_id) pair join: split-at-first-dot reconstructs
-    the id losslessly, and both forms null out for dot-less ids
-    (object_id NULL never equality-matches; concat NULL-propagates)."""
-    did = F.col(doc_id_col)
+    The rights dim is keyed doc_id = namespace || '.' || id, and only for
+    dot-less namespaces: that is exactly the (namespace, object_id) pair
+    join, since the reference splits doc_id at its FIRST dot
+    (namespace_expr/object_id_expr). A row ("a.b", "c") never matches doc
+    "a.b.c", which is ("a", "b.c")'s; its key is NULL, as is any key with a
+    NULL part, and NULL never equality-matches."""
     heldby, brlm = holdings_dims(holdings)
-    colls = coll_dim(mb_coll_item, mb_collection)
-    if dim_join:
-        r = rights_dim(rights_current).select(
-            F.concat(F.col("namespace"), F.lit("."), F.col("id")).alias(
-                doc_id_col
-            ),
+    dims = (
+        rights_dim(rights_current).select(
+            F.when(
+                ~F.col("namespace").contains("."),
+                F.concat(F.col("namespace"), F.lit("."), F.col("id")),
+            ).alias(doc_id_col),
             "rights",
-        )
-        heldby = heldby.withColumnRenamed("volume_id", doc_id_col)
-        brlm = brlm.withColumnRenamed("volume_id", doc_id_col)
-        colls = colls.withColumnRenamed("extern_item_id", doc_id_col)
-        if persist_dims:
-            r, heldby, brlm, colls = (
-                r.persist(),
-                heldby.persist(),
-                brlm.persist(),
-                colls.persist(),
-            )
-        return (
-            docs.join(r.hint(dim_join), doc_id_col, "left")
-            .join(heldby.hint(dim_join), doc_id_col, "left")
-            .join(brlm.hint(dim_join), doc_id_col, "left")
-            .join(colls.hint(dim_join), doc_id_col, "left")
-            .withColumn("coll_id", F.coalesce("coll_id", F.array(F.lit(0))))
-        )
-    docs = docs.withColumn("_ns", namespace_expr(did)).withColumn(
-        "_obj", object_id_expr(did)
+        ),
+        heldby.withColumnRenamed("volume_id", doc_id_col),
+        brlm.withColumnRenamed("volume_id", doc_id_col),
+        coll_dim(mb_coll_item, mb_collection).withColumnRenamed(
+            "extern_item_id", doc_id_col
+        ),
     )
-    r = rights_dim(rights_current).withColumnsRenamed(
-        {"namespace": "_ns", "id": "_obj"}
-    )
-    if persist_dims:
-        r, heldby, brlm, colls = (
-            r.persist(),
-            heldby.persist(),
-            brlm.persist(),
-            colls.persist(),
-        )
-    out = (
-        docs.join(broadcast(r), ["_ns", "_obj"], "left")
-        .join(
-            broadcast(heldby.withColumnRenamed("volume_id", doc_id_col)),
-            doc_id_col,
-            "left",
-        )
-        .join(
-            broadcast(brlm.withColumnRenamed("volume_id", doc_id_col)),
-            doc_id_col,
-            "left",
-        )
-        .join(
-            broadcast(colls.withColumnRenamed("extern_item_id", doc_id_col)),
-            doc_id_col,
-            "left",
-        )
-        .withColumn("coll_id", F.coalesce("coll_id", F.array(F.lit(0))))
-    )
-    return out.drop("_ns", "_obj")
+    for dim in dims:
+        docs = docs.join(dim.hint(dim_join or "broadcast"), doc_id_col, "left")
+    return docs.withColumn("coll_id", F.coalesce("coll_id", F.array(F.lit(0))))

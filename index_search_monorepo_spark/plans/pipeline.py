@@ -4,14 +4,16 @@
       → error-sink split (R2)
       → salted repartition (O13)
       → ocr / extracted_spans columns (A1/F1 + boilerplate classifier)
-      → broadcast-join dims (J1–J4) + catalog item metadata (J5/J6)
+      → left-join doc_id-keyed dims (J1–J4) + catalog item metadata (J5/J6)
       → assemble §1.3 document struct
       → write parquet partitioned by bucket + checkpoint manifest (R5/O14)
 
 The reference's four services (monitor → retriever → generator → indexer over
 RabbitMQ) collapse into Catalyst stages of one job; the only shuffles are the
-explicit salted repartition, the dim pre-aggregations (tiny), and the
-oversized-volume reassembly (skew fraction only).
+explicit salted repartition, the dim pre-aggregations (tiny), the
+oversized-volume reassembly (skew fraction only) and, under a shuffle
+doc_meta_join hint, the doc_id exchanges. Nothing is cached: the job is one
+write over an uncached plan, its per-bucket counts observed in that write.
 """
 
 from __future__ import annotations
@@ -60,21 +62,19 @@ def extract_documents(
     include_poison: bool = True,
     page_threshold: int = 10_000,
     repartition: bool = True,
-    persist_dims: bool = True,
     doc_meta_join: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    # doc_meta_join: join strategy hint ("shuffle_hash" | "merge" | None=auto)
-    # for the two DOC-CARDINALITY metadata joins (catalog items, METS
-    # fields). Unlike the four true dims (rights/holdings/collections, which
-    # stay broadcast), these grow WITH the corpus — the reference catalog is
-    # ~17M fat records, far past any broadcast threshold — so at production
-    # scale they must shuffle (or be bucket-co-located at write time). None
-    # lets Catalyst/AQE decide, which at bench scale picks broadcast: correct
-    # for a one-shot job, but the per-run driver-side broadcast build is a
-    # fixed serial cost that a 1000-executor run would not have. For
-    # repeated-enrichment deployments, write both sides bucketed on doc_id
-    # instead (operators/bucketing.py) — the join then needs no Exchange at
-    # all (test_bucketing.py).
+    # doc_meta_join: join strategy hint ("shuffle_hash" | "merge" | None)
+    # for all six DOC-CARDINALITY joins: catalog items, METS fields and the
+    # four MySQL dims. They grow WITH the corpus — the reference catalog is
+    # ~17M fat records, rights_current one row per volume — so at
+    # production scale they must shuffle (or be bucket-co-located at write
+    # time). None leaves catalog/METS to Catalyst/AQE and broadcasts the
+    # MySQL dims: correct for a one-shot job at bench scale, but each
+    # materialization pays a driver-side broadcast build that grows with
+    # the corpus. For repeated-enrichment deployments, write both sides
+    # bucketed on doc_id instead (operators/bucketing.py) — the join then
+    # needs no Exchange at all (test_bucketing.py).
     # page_threshold: docs above it take the explode->distribute->reassemble
     # path (extraction.with_ocr_skew_aware). Measured ablation (BASELINE.md):
     # at 2 000 pages/doc the per-row work is ~10 ms, and in-place processing
@@ -96,13 +96,6 @@ def extract_documents(
         tables["holdings_htitem_htmember"],
         tables["mb_coll_item"],
         tables["mb_collection"],
-        persist_dims=persist_dims,
-        # r6: the hint covers ALL doc-cardinality metadata joins — the four
-        # MySQL dims are per-volume tables too (rights_current ~17M rows at
-        # reference scale), and their per-materialization driver-side
-        # broadcast builds were the corpus-proportional serial term in the
-        # r5 sf1 scaling fit (s = 23.2 s at 120k docs). Shuffle-hash joins
-        # on doc_id share one fact-side exchange and parallelize the build.
         dim_join=doc_meta_join,
     )
     # the catalog dim often lands as one parquet file -> one split; without
@@ -118,14 +111,6 @@ def extract_documents(
     )
     items = catalog_item_metadata(catalog, extra_passthrough=("allfields",))
     mets = with_mets_fields(tables["mets_meta"])
-    if persist_dims:
-        # broadcast dims are built once per job on a real run (their cost
-        # amortizes to zero against the fact side); persisting pins that
-        # once-per-job semantic for callers that materialize the output
-        # multiple times. Dim cardinality is bounded (catalog items, per-doc
-        # METS fields), so the footprint is small.
-        items = items.persist()
-        mets = mets.persist()
     if doc_meta_join:
         items = items.hint(doc_meta_join)
         mets = mets.hint(doc_meta_join)
@@ -155,14 +140,17 @@ def run_extraction_job(
     n_buckets: int = 64,
     input_snapshot_id: str | None = None,
 ) -> dict:
-    """Checkpointed, resumable production entry point."""
+    """Checkpointed, resumable production entry point: one Spark write
+    over an uncached plan (plus the error-sink append)."""
+    if n_buckets < 1:
+        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     tables = load_corpus(spark, corpus_dir)
     docs, errors = extract_documents(spark, tables)
     docs = with_bucket(docs, n_buckets, doc_id_col="id")
     docs = pending_only(docs, spark, output_dir)
     errors.write.mode("append").parquet(str(Path(output_dir) / "errors"))
     snapshot = input_snapshot_id or f"corpus:{corpus_dir}"
-    return run_checkpointed(docs, output_dir, snapshot, spark)
+    return run_checkpointed(docs, output_dir, snapshot, spark, n_buckets)
 
 
 def publish_snapshot(

@@ -1,9 +1,11 @@
-"""J1–J4 broadcast enrichment vs the per-document oracle
+"""J1–J4 enrichment vs the per-document oracle
 (mysql_data_extractor.py:91-116 semantics)."""
 
 from __future__ import annotations
 
 from collections import defaultdict
+
+import pytest
 
 from index_search_monorepo_spark.operators.enrichment import with_mysql_fields
 from index_search_monorepo_spark.oracle.reference_oracle import oracle_mysql_fields
@@ -65,3 +67,25 @@ def test_mysql_fields_match_oracle(spark, tables):
     assert checked_exactly_one_guard > 0
     assert checked_brlm_subset > 0
     assert checked_default > 0
+
+
+@pytest.mark.parametrize("dim_join", [None, "shuffle_hash"])
+def test_rights_key_splits_at_first_dot(spark, dim_join):
+    """Rights rows ("a.b", "c") and ("a", "b.c") both concatenate to
+    "a.b.c", but the pair join splits doc_id at its FIRST dot, so only
+    ("a", "b.c") matches: one output row per doc under either hint."""
+    docs = spark.createDataFrame([("a.b.c",), ("a.b",), ("x",)], "doc_id string")
+    rights = spark.createDataFrame(
+        [("a.b", "c", 1), ("a", "b.c", 2), ("a", "b", 3), ("x", None, 4)],
+        "namespace string, id string, attr int",
+    )
+    holdings = spark.createDataFrame(
+        [], "volume_id string, member_id string, access_count int"
+    )
+    coll_item = spark.createDataFrame([], "extern_item_id string, MColl_ID int")
+    collection = spark.createDataFrame([], "MColl_ID int, num_items int")
+    out = with_mysql_fields(
+        docs, rights, holdings, coll_item, collection, dim_join=dim_join
+    )
+    got = sorted((r["doc_id"], r["rights"]) for r in out.collect())
+    assert got == [("a.b", 3), ("a.b.c", 2), ("x", None)]

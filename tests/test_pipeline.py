@@ -6,6 +6,7 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from index_search_monorepo_spark.operators.assemble import OUTPUT_FIELD_ORDER
@@ -58,6 +59,39 @@ def test_checkpointed_run_and_resume(spark, tables, corpus_dir, tmp_path):
     # errors appended twice (two runs)
     errs = spark.read.parquet(f"{out_dir}/errors")
     assert errs.count() == 2 * tables["documents_spans_bad"].count()
+
+
+def test_checkpointed_run_caches_nothing_and_manifest_recounts(
+    spark, corpus_dir, tmp_path
+):
+    """The job is one write over an uncached plan: no persistent RDD
+    survives it, and the manifest's per-bucket (n_docs, span_count),
+    observed during the write, equal a recount of the written data."""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    # other tests' localCheckpoints stay registered past clearCache()
+    spark.catalog.clearCache()
+    before = set(persistent().keySet())
+    out_dir = str(tmp_path / "out")
+    m = run_extraction_job(spark, corpus_dir, out_dir, n_buckets=6)
+    assert set(persistent().keySet()) == before
+    manifest = json.loads(Path(m["manifest"]).read_text())
+    recount = {
+        r["bucket"]: (r["n_docs"], r["span_count"])
+        for r in spark.read.parquet(f"{out_dir}/data")
+        .groupBy("bucket")
+        .agg(F.count("*").alias("n_docs"), F.sum("span_count").alias("span_count"))
+        .collect()
+    }
+    assert {r["bucket"]: (r["n_docs"], r["span_count"]) for r in manifest} == recount
+    assert len(manifest) == m["buckets"] == len(recount) > 1
+
+
+def test_run_extraction_job_rejects_bad_n_buckets(spark, corpus_dir, tmp_path):
+    out_dir = tmp_path / "out"
+    for n in (0, -3):
+        with pytest.raises(ValueError, match="n_buckets"):
+            run_extraction_job(spark, corpus_dir, str(out_dir), n_buckets=n)
+    assert not out_dir.exists()  # refused before the error-sink append
 
 
 def test_salted_repartition_balances_pages(spark, tables, monkeypatch):

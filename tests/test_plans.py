@@ -181,9 +181,9 @@ def test_doc_meta_join_hint_drops_driver_broadcast_build(spark, tables):
     docs). The hint must produce ShuffledHashJoins for all six
     doc-cardinality joins, sharing one fact-side doc_id exchange, with
     zero doc-cardinality BroadcastHashJoins left in the plan."""
-    auto_docs, _ = extract_documents(spark, tables, persist_dims=False)
+    auto_docs, _ = extract_documents(spark, tables)
     hinted_docs, _ = extract_documents(
-        spark, tables, persist_dims=False, doc_meta_join="shuffle_hash"
+        spark, tables, doc_meta_join="shuffle_hash"
     )
     hinted = _plan(hinted_docs)
     # items + mets + rights + heldby + brlm + colls
@@ -191,9 +191,8 @@ def test_doc_meta_join_hint_drops_driver_broadcast_build(spark, tables):
     # the fact side exchanges ONCE on doc_id/id; every further
     # doc-cardinality join reuses that partitioning (dim sides each
     # exchange their own slim rows)
-    # and the hint changes strategy only, not results — this also pins
-    # the rights-dim doc_id rekey (concat(namespace,'.',id)) against the
-    # (namespace, object_id) pair-join semantics
+    # and the hint changes strategy only, not results (the rights-dim
+    # doc_id key itself is pinned in test_enrichment.py)
     full_cols = ["id", "ocr", "rights", "ht_heldby", "ht_heldby_brlm",
                  "coll_id"]
     a = auto_docs.select(*full_cols)
