@@ -18,10 +18,14 @@ write over an uncached plan, its per-bucket counts observed in that write.
 
 from __future__ import annotations
 
+import json
 from pathlib import Path
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
 from index_search_monorepo_spark.functions.marc import extract_allfields
 from index_search_monorepo_spark.operators.assemble import (
@@ -45,15 +49,42 @@ from index_search_monorepo_spark.operators.skew import (
     spread_small_scan,
 )
 
+# footer key under which Spark's parquet writer stores the row schema
+_SPARK_ROW_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(path: Path) -> StructType:
+    """Spark's own schema inference for `path` (mergeSchema off), read on
+    the driver from one footer: a Spark-written file's stored row schema,
+    else its Arrow schema. A shard directory is read through its first
+    data file, as Spark's inference does."""
+    if path.is_dir():
+        path = min(
+            p for p in path.glob("*.parquet") if not p.name.startswith(("_", "."))
+        )
+    arrow = pq.read_schema(path)
+    stored = (arrow.metadata or {}).get(_SPARK_ROW_SCHEMA)
+    if stored:
+        return StructType.fromJson(json.loads(stored))
+    return from_arrow_schema(arrow, prefer_timestamp_ntz=True)
+
 
 def load_corpus(spark: SparkSession, corpus_dir: str) -> dict[str, DataFrame]:
+    """The corpus tables present under `corpus_dir`, one lazy DataFrame
+    each. Schemas come from the parquet footers on the driver, so loading
+    launches no Spark job (a bare `spark.read.parquet` runs a one-task
+    footer-inference job per table)."""
     d = Path(corpus_dir)
     names = [
         "documents_spans", "documents_spans_bad", "mets_meta", "catalog",
         "rights_current", "holdings_htitem_htmember", "mb_coll_item",
         "mb_collection", "hf",
     ]
-    return {n: spark.read.parquet(str(d / f"{n}.parquet")) for n in names if (d / f"{n}.parquet").exists()}
+    return {
+        n: spark.read.schema(_footer_schema(p)).parquet(str(p))
+        for n in names
+        if (p := d / f"{n}.parquet").exists()
+    }
 
 
 def extract_documents(

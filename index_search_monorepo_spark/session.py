@@ -8,6 +8,13 @@ on local[N]:
  - shuffle partitions sized to cores locally; on a real cluster this is set per
    job from input size / target partition bytes.
  - driver heap sized to the host (SPARK_DRIVER_MEMORY overrides it).
+ - spark.python.sql.dataFrameDebugging.enabled=false: with it on, every
+   `F.*`/`Column` call made while building a plan also makes ~5
+   driver-to-JVM calls to record its Python file:line as the expression's
+   origin. Dropped: that file:line in a DataFrame analysis error's query
+   context (the error class and message stay). PySpark reads the value once
+   per process, at the first such call, so it is set when the session is
+   built; extra_conf can turn it back on.
 """
 
 from __future__ import annotations
@@ -17,6 +24,8 @@ import os
 from pyspark.sql import SparkSession
 
 _MAX_DRIVER_GB = 16
+# per-call Python origin capture for DataFrame/Column calls (module docstring)
+DATAFRAME_DEBUGGING = "spark.python.sql.dataFrameDebugging.enabled"
 
 
 def driver_memory() -> str:
@@ -68,6 +77,7 @@ def get_spark(
         # that is per-corpus, so callers set it via extra_conf (bench
         # workers use 16, matching the synthetic corpora's row groups).
         .config("spark.sql.parquet.compression.codec", "zstd")
+        .config(DATAFRAME_DEBUGGING, "false")
         .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         # keep stdout/stderr free of \r-progress frames: bench.py's artifact

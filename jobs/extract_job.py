@@ -26,6 +26,29 @@ import json
 import sys
 
 
+def session_builder(shuffle_partitions: int | None = None):
+    """The job's SparkSession builder: no master, so spark-submit's applies.
+    It carries the confs the job depends on, including session.py's
+    dataFrameDebugging=false, which must be set before the session exists."""
+    from pyspark.sql import SparkSession
+
+    from index_search_monorepo_spark.session import DATAFRAME_DEBUGGING
+
+    builder = (
+        SparkSession.builder.appName("index_search_monorepo_spark.extract")
+        .config("spark.sql.caseSensitive", "true")
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
+        .config(DATAFRAME_DEBUGGING, "false")
+    )
+    if shuffle_partitions:
+        builder = builder.config(
+            "spark.sql.shuffle.partitions", str(shuffle_partitions)
+        )
+    return builder
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--corpus-dir", required=True)
@@ -51,20 +74,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = p.parse_args(argv)
 
-    from pyspark.sql import SparkSession
-
-    builder = (
-        SparkSession.builder.appName("index_search_monorepo_spark.extract")
-        .config("spark.sql.caseSensitive", "true")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
-    )
-    if args.shuffle_partitions:
-        builder = builder.config(
-            "spark.sql.shuffle.partitions", str(args.shuffle_partitions)
-        )
-    spark = builder.getOrCreate()
+    spark = session_builder(args.shuffle_partitions).getOrCreate()
 
     if args.incremental:
         from index_search_monorepo_spark.streaming.incremental import (

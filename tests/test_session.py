@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import os
 
-from index_search_monorepo_spark.session import driver_memory
+from index_search_monorepo_spark.session import DATAFRAME_DEBUGGING, driver_memory
 
 
 def test_driver_memory_fits_host(monkeypatch):
@@ -17,3 +17,9 @@ def test_driver_memory_fits_host(monkeypatch):
     assert gb == 1 or gb * 2**31 <= host
     monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
     assert driver_memory() == "3g"
+
+
+def test_dataframe_debugging_off(spark):
+    """get_spark turns off PySpark's per-call origin capture (~5 Py4J round
+    trips on every Column call while a plan is built)."""
+    assert spark.conf.get(DATAFRAME_DEBUGGING) == "false"

@@ -27,6 +27,16 @@ def _spark_submit() -> str | None:
     return str(bin_path) if bin_path.exists() else None
 
 
+def test_job_session_turns_off_dataframe_debugging():
+    """spark-submit runs build the session from the job's own builder, so
+    it must carry the conf that get_spark sets."""
+    sys.path.insert(0, str(REPO))
+    from index_search_monorepo_spark.session import DATAFRAME_DEBUGGING
+    from jobs.extract_job import session_builder
+
+    assert session_builder()._options[DATAFRAME_DEBUGGING] == "false"
+
+
 @pytest.mark.slow
 def test_spark_submit_pyfiles(tmp_path):
     submit = _spark_submit()
