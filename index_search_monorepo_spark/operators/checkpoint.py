@@ -8,7 +8,7 @@ processes a set of pending buckets IN ONE SPARK JOB (never a driver loop over
 buckets), writes output partitioned by bucket, then atomically appends one
 manifest row per bucket that received documents:
 
-    (bucket, input_snapshot_id, n_docs, span_count, status,
+    (bucket, n_buckets, input_snapshot_id, n_docs, span_count, status,
      processed_at, error)
 
 The per-bucket counts ride the write itself as an Observation (fixed-width
@@ -42,14 +42,29 @@ def with_bucket(df: DataFrame, n_buckets: int, doc_id_col: str = "doc_id") -> Da
     )
 
 
+def _manifest_rows(output_dir: str):
+    for f in (Path(output_dir) / MANIFEST_DIR).glob("*.json"):
+        yield from json.loads(f.read_text())
+
+
 def completed_buckets(output_dir: str) -> list[int]:
     """Buckets that any manifest under `output_dir` records as completed."""
-    done = set()
-    for f in (Path(output_dir) / MANIFEST_DIR).glob("*.json"):
-        done.update(
-            r["bucket"] for r in json.loads(f.read_text()) if r["status"] == "completed"
+    return sorted(
+        {r["bucket"] for r in _manifest_rows(output_dir) if r["status"] == "completed"}
+    )
+
+
+def check_bucket_count(output_dir: str, n_buckets: int) -> None:
+    """Refuse to resume `output_dir` under a different bucket count: a bucket
+    id names other documents under another modulus, so `pending_only` would
+    rewrite completed documents into new buckets beside their old copies.
+    Manifest rows written before the count was recorded are accepted."""
+    recorded = {r["n_buckets"] for r in _manifest_rows(output_dir) if "n_buckets" in r}
+    if recorded - {n_buckets}:
+        raise ValueError(
+            f"{output_dir} was written with n_buckets={sorted(recorded)}, "
+            f"got {n_buckets}"
         )
-    return sorted(done)
 
 
 def pending_only(
@@ -104,6 +119,7 @@ def run_checkpointed(
     manifest_rows = [
         {
             "bucket": b,
+            "n_buckets": n_buckets,
             "input_snapshot_id": input_snapshot_id,
             "n_docs": n,
             "span_count": spans,

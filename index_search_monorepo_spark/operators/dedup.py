@@ -1039,71 +1039,6 @@ def duplicate_passages(
     ).drop("_grp")
 
 
-def excise_passages(
-    df: DataFrame,
-    passages: DataFrame,
-    text_col: str = "text",
-    out_col: str | None = None,
-) -> DataFrame:
-    """Apply `duplicate_passages` output: remove every flagged word
-    extent from its document (Lee et al.'s remove-ALL-occurrences
-    policy — both copies of a duplicated passage go; the k-1 words of
-    context the paper keeps are already outside the reported extents).
-
-    Adds `out_col` (default `<text_col>_excised`: surviving words
-    re-joined with single spaces — output is whitespace-normalized) and
-    `n_words_excised`. One doc-keyed join against the per-doc cut list
-    (AQE broadcasts it when duplication is sparse) + an indexed
-    higher-order filter; document text never shuffles.
-
-    The two-argument lambda is the INTENTIONAL (element, index) form of
-    F.filter (CLAUDE.md lesson 2 is about accidental arity)."""
-    if out_col is None:
-        out_col = f"{text_col}_excised"
-    cuts = passages.groupBy("doc_id").agg(
-        F.collect_list(
-            F.struct(
-                F.col("start_word").alias("s"), F.col("end_word").alias("e")
-            )
-        ).alias("_cuts")
-    )
-    bound = (
-        df.join(_maybe_broadcast(cuts, "auto"), "doc_id", "left")
-        .withColumn(
-            "_cuts", F.coalesce(F.col("_cuts"), F.array().cast(
-                "array<struct<s:bigint,e:bigint>>"
-            ))
-        )
-        .withColumn(
-            "_toks",
-            # same whitespace-class tokenization as duplicate_passages —
-            # positions must refer to the SAME token stream
-            F.filter(
-                F.split(F.col(text_col), "[ \\t\\n\\r\\f]+"),
-                lambda t: t != F.lit(""),
-            ),
-        )
-        .withColumn(
-            "_kept",
-            F.filter(
-                F.col("_toks"),
-                lambda t, i: ~F.exists(
-                    F.col("_cuts"),
-                    lambda c: (i >= c["s"]) & (i <= c["e"]),
-                ),
-            ),
-        )
-    )
-    return (
-        bound.withColumn(out_col, F.concat_ws(" ", F.col("_kept")))
-        .withColumn(
-            "n_words_excised",
-            (F.size("_toks") - F.size("_kept")).cast("long"),
-        )
-        .drop("_cuts", "_toks", "_kept")
-    )
-
-
 def elect_canonicals(
     clusters: DataFrame,
     scores: DataFrame,

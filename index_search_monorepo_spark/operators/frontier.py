@@ -2,7 +2,7 @@
 over a URL feed.
 
 Closes the crawl loop the other r5 operators open: sitemap seeds
-(sources/sitemap.py) and outlinks (operators/weblinks.py) feed URLs,
+(sources/sitemap.py) and page outlinks feed URLs,
 robots admission (operators/robots.py) filters them, PageRank
 (operators/pagerank.py) supplies priority — this operator turns the
 survivors into a fetch schedule a fleet of fetchers can execute without

@@ -258,11 +258,3 @@ def generate_kbart(
     ).select(*KBART_COLUMNS, "seq")
 
     return good, missing.unionByName(bad)
-
-
-def write_kbart_tsv(rows: DataFrame, path: str) -> None:
-    """S12 TSV sink (ht_utils.py:150-159): tab-separated, header, input
-    order restored via seq."""
-    rows.orderBy("seq").drop("seq").coalesce(1).write.mode("overwrite").option(
-        "sep", "\t"
-    ).option("header", True).csv(path)

@@ -1,13 +1,12 @@
 """Integer-exact PageRank and inlink anchor aggregation over a link graph.
 
-The web-extraction tier emits an outlink feed (operators/weblinks.outlinks:
-one row per anchor, resolved against the document's own base URI); these
-operators are the graph-analytics layer on top of it: PageRank for
-crawl-frontier prioritization / quality weighting, and per-target anchor
-aggregation (the classic index-time anchor-text fold — inbound anchors
-describe a page better than its own boilerplate). The reference's engine
-has no graph operator; this extends the same family as weblinks.py under
-the north rule's web-scale extraction tier.
+Input is an edge feed (one row per anchor: source URL, target URL, anchor
+text); these operators are the graph-analytics layer on top of it: PageRank
+for crawl-frontier prioritization / quality weighting, and per-target
+anchor aggregation (the classic index-time anchor-text fold — inbound
+anchors describe a page better than its own boilerplate). The reference's
+engine has no graph operator; this extends the north rule's web-scale
+extraction tier.
 
 Design decisions, in scale order:
 
@@ -31,8 +30,7 @@ Design decisions, in scale order:
    edges), one groupBy(dst) partial-aggregated sum, one left join back to
    nodes. Ranks and degrees are node-grain (small next to edges); the
    edge table is scanned once per iteration, so callers running many
-   iterations should `persist()` (or bucket by src — see
-   operators/bucketing.py) the edge frame. Lineage grows linearly with
+   iterations should `persist()` the edge frame. Lineage grows linearly with
    `iters`; for tens of iterations checkpoint every ~10.
 """
 

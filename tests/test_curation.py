@@ -768,54 +768,9 @@ class TestDuplicatePassages:
         assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
-class TestExcisePassages:
-    def test_flagged_extents_removed(self, spark):
-        docs = spark.createDataFrame(
-            [
-                (0, "u0a u0b u0c alpha beta gamma delta epsilon zeta eta t0a t0b"),
-                (1, "v1a alpha beta gamma delta epsilon zeta eta w1a w1b w1c w1d"),
-                (2, "untouched document stays put"),
-            ],
-            ["doc_id", "text"],
-        )
-        passages = D.duplicate_passages(docs, k=5)
-        out = {
-            r["doc_id"]: (r["text_excised"], r["n_words_excised"])
-            for r in D.excise_passages(docs, passages).collect()
-        }
-        # remove-all policy: BOTH copies of the shared passage are cut
-        assert out[0] == ("u0a u0b u0c t0a t0b", 7)
-        assert out[1] == ("v1a w1a w1b w1c w1d", 7)
-        assert out[2] == ("untouched document stays put", 0)
-
-    def test_duckdb_parity_indexed_lambda(self, spark):
-        """Cross-engine pin for the indexed-HOF excision (Spark filter
-        index is 0-based, DuckDB's is 1-based)."""
-        import duckdb as dd
-
-        docs = spark.createDataFrame(
-            [(0, "w0 w1 w2 w3 w4 w5 w6 w7")], ["doc_id", "text"]
-        )
-        passages = spark.createDataFrame(
-            [(0, 2, 4), (0, 6, 6)],
-            ["doc_id", "start_word", "end_word"],
-        )
-        srow = D.excise_passages(docs, passages).collect()[0]
-        con = dd.connect()
-        orow = con.execute("""
-        SELECT array_to_string(list_filter(
-                 list_filter(string_split('w0 w1 w2 w3 w4 w5 w6 w7', ' '),
-                             x -> x <> ''),
-                 (x, i) -> NOT ((i - 1 BETWEEN 2 AND 4)
-                                OR (i - 1 BETWEEN 6 AND 6))), ' ')
-        """).fetchone()[0]
-        assert srow["text_excised"] == orow == "w0 w1 w5 w7"
-        assert srow["n_words_excised"] == 4
-
-
 class TestPassageLineWrapRecall:
     def test_same_passage_different_wrap_points_matches(self, spark):
-        """The curation chain feeds newline-joined text; a space-only
+        """OCR pages arrive as newline-joined text; a space-only
         split would glue 'end\\nstart' into one token and two wrappings
         of the same passage would never match (review finding)."""
         body = " ".join(f"p{i}" for i in range(10))
@@ -830,15 +785,6 @@ class TestPassageLineWrapRecall:
         }
         assert out[0] == (2, 11)
         assert out[1] == (1, 10)
-        # excision uses the same token stream: both copies removed and
-        # the output is whitespace-normalized (no embedded newlines)
-        ex = {
-            r["doc_id"]: r["text_excised"]
-            for r in D.excise_passages(
-                docs, D.duplicate_passages(docs, k=8)
-            ).collect()
-        }
-        assert ex[0] == "ua ub" and ex[1] == "vc vd"
 
 
 class TestKmeansTrainer:

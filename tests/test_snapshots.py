@@ -299,6 +299,8 @@ def test_write_audit_publish_gate(spark, tmp_path):
     assert not r2["published"] and r2["failed"] == ["id_nn"]
     assert SNAP.current_version(table) == 1
     assert "refused-0001" in r2["audit_path"]
+    audit2 = json.loads(open(r2["audit_path"]).read())
+    assert audit2["failed"] == ["id_nn"] and audit2["overridden"] is False
     # override: publishes v2, failed audit stays on record
     r3 = publish_snapshot_audited(
         spark, bad, table, checks, allow_failed=True

@@ -292,351 +292,6 @@ def test_streaming_exact_dedup(spark, tmp_path):
     assert kept == {"doc0", "doc1", "doc3"}
 
 
-def test_rule_flags_compose_with_streaming(spark, tmp_path):
-    """The stage-A curation rules (URL blocklist + C4 + Gopher) are pure
-    per-row expressions, so the SAME rule_flags call runs unchanged over
-    a readStream source — streaming ingest can filter at the edge with
-    zero extra operators."""
-    from index_search_monorepo_spark.plans.curation import rule_flags
-
-    land = tmp_path / "landed"
-    out = tmp_path / "out"
-    land.mkdir()
-    good = (
-        "the quick brown fox jumps over and over to reach the lazy dog "
-        "that waited with patience of a saint and would not have moved. "
-        + "good word " * 30
-        + "the tale ends well and that is that so it does.\n"
-        "A second proper sentence lands here.\n"
-        "And a third one closes the page."
-    )
-    spark.createDataFrame(
-        [
-            (0, good, "https://ok.example.org/a"),
-            (1, good + "\ncode { brace", "https://ok.example.org/b"),
-            (2, good, "https://ads.blocked.com/x"),
-        ],
-        "doc_id long, text string, url string",
-    ).write.parquet(str(land / "batch0"))
-
-    stream = spark.readStream.schema(
-        "doc_id long, text string, url string"
-    ).option("pathGlobFilter", "*.parquet").parquet(str(land) + "/*")
-    flagged = rule_flags(
-        stream, url_col="url", blocked_domains=["blocked.com"]
-    ).filter("rule_keep")
-    q = (
-        flagged.writeStream.format("parquet")
-        .option("path", str(out))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.read.parquet(str(out)).select("doc_id").collect()
-    assert sorted(r["doc_id"] for r in rows) == [0]
-
-
-# ------------------------------------------------------------- sessions ---
-
-
-def _events_df(spark, pred=None):
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").select(
-        "user_id", "event_id", "ts", "event_type"
-    )
-    return ev.filter(pred) if pred is not None else ev
-
-
-def test_streaming_sessionize_matches_batch(spark, tmp_path):
-    """One-batch drain == temporal.sessionize row for row."""
-    from index_search_monorepo_spark.operators.temporal import sessionize
-    from index_search_monorepo_spark.streaming.sessions import (
-        streaming_sessionize,
-    )
-
-    ev = _events_df(spark)
-    land = tmp_path / "ev"
-    ev.coalesce(1).write.parquet(str(land))
-    stream = spark.readStream.schema(ev.schema).parquet(str(land))
-    q = (
-        streaming_sessionize(stream, 900)
-        .writeStream.format("memory")
-        .queryName("sess_one")
-        .option("checkpointLocation", str(tmp_path / "ck1"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = sorted(
-        (r["event_id"], r["session_ord"], r["session_event_ord"])
-        for r in spark.sql("SELECT * FROM sess_one").collect()
-    )
-    want = sorted(
-        (r["event_id"], r["session_ord"], r["session_event_ord"])
-        for r in sessionize(ev, 900).collect()
-    )
-    assert got == want and got
-
-
-def test_streaming_sessionize_state_carries_across_batches(spark, tmp_path):
-    """Two drains over one checkpoint (late-landing files) == batch run
-    over the union — session ordinals continue, they don't restart."""
-    from index_search_monorepo_spark.operators.temporal import sessionize
-    from index_search_monorepo_spark.streaming.sessions import (
-        streaming_sessionize,
-    )
-
-    ev = _events_df(spark, F.col("user_id") % 5 == 0)
-    cut = ev.agg(
-        F.expr("percentile_approx(unix_micros(to_utc_timestamp(ts,'UTC')),"
-               " 0.5)")
-    ).collect()[0][0]
-    us = F.unix_micros(F.to_utc_timestamp(F.col("ts"), "UTC"))
-    early, late = ev.filter(us <= cut), ev.filter(us > cut)
-    land = tmp_path / "ev2"
-    land.mkdir()
-    early.coalesce(1).write.parquet(str(land / "batch=0"))
-
-    out = tmp_path / "sess_out"
-
-    def drain():
-        stream = spark.readStream.schema(ev.schema).option(
-            "recursiveFileLookup", "true"
-        ).parquet(str(land))
-        q = (
-            streaming_sessionize(stream, 900)
-            .writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", str(tmp_path / "ck2"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    drain()
-    late.coalesce(1).write.parquet(str(land / "batch=1"))
-    drain()
-    got = sorted(
-        (r["event_id"], r["session_ord"], r["session_event_ord"])
-        for r in spark.read.parquet(str(out)).collect()
-    )
-    want = sorted(
-        (r["event_id"], r["session_ord"], r["session_event_ord"])
-        for r in sessionize(ev, 900).collect()
-    )
-    assert got == want and got
-
-
-def test_streaming_session_stats_parity_and_boundary(spark, tmp_path):
-    """session_window (run in batch AND as a one-batch stream) agrees
-    with temporal.session_stats on real microsecond events; the exact-
-    boundary semantic difference is pinned on a toy."""
-    from index_search_monorepo_spark.operators.temporal import session_stats
-    from index_search_monorepo_spark.streaming.sessions import (
-        streaming_session_stats,
-    )
-
-    ev = _events_df(spark)
-    native = sorted(
-        (r["user_id"], r["session_start"], r["n_events"])
-        for r in streaming_session_stats(ev, "900 seconds").collect()
-    )
-    batch = sorted(
-        (r["user_id"], r["n_events"])
-        for r in session_stats(ev, 900).collect()
-    )
-    # same sessions on real microsecond data (no exact-boundary gaps)
-    assert sorted((u, n) for u, _s, n in native) == batch
-
-    # STREAM run: session windows support only append mode, which emits
-    # a session once the watermark passes its close — drain the real
-    # events, then land a far-future sentinel and drain again to push
-    # the watermark past every real session end.
-    land = tmp_path / "ev3"
-    land.mkdir()
-    out = tmp_path / "sess_stats_out"
-    ev.coalesce(1).write.parquet(str(land / "batch=0"))
-
-    def drain():
-        stream = spark.readStream.schema(ev.schema).option(
-            "recursiveFileLookup", "true"
-        ).parquet(str(land))
-        q = (
-            streaming_session_stats(stream, "900 seconds", "1 second")
-            .writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", str(tmp_path / "ck3"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    drain()
-    sentinel_ts = ev.agg(F.max("ts")).collect()[0][0] + dt.timedelta(
-        days=365
-    )
-    spark.createDataFrame(
-        [(-1, -1, sentinel_ts, "flush")], ev.schema
-    ).coalesce(1).write.parquet(str(land / "batch=1"))
-    drain()
-    streamed = sorted(
-        (r["user_id"], r["session_start"], r["n_events"])
-        for r in spark.read.parquet(str(out))
-        .filter(F.col("user_id") >= 0)
-        .collect()
-    )
-    assert streamed == native
-
-    # boundary pin: session_window MERGES an event at exactly last_ts +
-    # gap (windows are inclusive at the close), agreeing with the batch
-    # strictly-greater rule on BOTH sides of the boundary
-    def _counts(second_ts):
-        toy = spark.createDataFrame(
-            [
-                (1, dt.datetime(2024, 1, 1, 10, 0, 0), 1, "a"),
-                (2, second_ts, 1, "a"),
-            ],
-            "event_id long, ts timestamp_ntz, user_id long,"
-            " event_type string",
-        )
-        return (
-            streaming_session_stats(toy, "900 seconds").count(),
-            session_stats(toy, 900).count(),
-        )
-
-    at_gap = dt.datetime(2024, 1, 1, 10, 15, 0)
-    assert _counts(at_gap) == (1, 1)  # exactly gap: same session, both
-    just_past = dt.datetime(2024, 1, 1, 10, 15, 0, 1)
-    assert _counts(just_past) == (2, 2)  # gap + 1 us: new session, both
-
-
-# --------------------------------------------------------------------------
-# streaming index maintenance (streaming/index_update.py)
-# --------------------------------------------------------------------------
-
-
-def _write_docs_file(spark, land_dir, rows, name):
-    import os
-
-    os.makedirs(land_dir, exist_ok=True)
-    spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{land_dir}/_stage_{name}")
-    # move the part file into the landing dir as one arrival
-    import glob
-    import shutil
-
-    part = glob.glob(f"{land_dir}/_stage_{name}/part-*.parquet")[0]
-    shutil.move(part, f"{land_dir}/{name}.parquet")
-    shutil.rmtree(f"{land_dir}/_stage_{name}")
-
-
-def _norm_index(idx):
-    return sorted(
-        (
-            r["term"],
-            r["seg_id"],
-            tuple((p["doc_id"], p["tf"]) for p in r["postings"]),
-        )
-        for r in idx.collect()
-    )
-
-
-def test_incremental_index_update_last_write_wins(spark, tmp_path):
-    from index_search_monorepo_spark.operators.postings import (
-        build_postings,
-    )
-    from index_search_monorepo_spark.streaming.index_update import (
-        compact_index,
-        current_index,
-        incremental_index_update,
-    )
-
-    land = str(tmp_path / "land")
-    idx_dir = str(tmp_path / "idx")
-    batch1 = [(i, f"alpha beta doc{i}") for i in range(10)]
-    _write_docs_file(spark, land, batch1, "b1")
-    incremental_index_update(
-        spark, land, idx_dir, segment_size=4, max_files_per_trigger=1
-    )
-
-    # second arrival: docs 5-9 REWRITTEN (update case) + 10-14 new
-    batch2 = [(i, f"gamma doc{i} gamma") for i in range(5, 15)]
-    _write_docs_file(spark, land, batch2, "b2")
-    incremental_index_update(
-        spark, land, idx_dir, segment_size=4, max_files_per_trigger=1
-    )
-
-    final_corpus = spark.createDataFrame(
-        [(i, f"alpha beta doc{i}") for i in range(5)]
-        + [(i, f"gamma doc{i} gamma") for i in range(5, 15)],
-        "doc_id long, text string",
-    )
-    want = _norm_index(build_postings(final_corpus, segment_size=4))
-    got = _norm_index(current_index(spark, idx_dir))
-    assert got == want
-
-    # compaction materializes the same view
-    dst = compact_index(spark, idx_dir, segment_size=4)
-    assert _norm_index(spark.read.parquet(dst)) == want
-
-    # draining again with nothing new changes nothing (checkpointed)
-    incremental_index_update(
-        spark, land, idx_dir, segment_size=4, max_files_per_trigger=1
-    )
-    assert _norm_index(current_index(spark, idx_dir)) == want
-
-    # merge-on-read never explodes postings to doc grain: the dead-entry
-    # filter is a higher-order function over a (seg_id -> doc->batch map)
-    # join, so no Generate appears in the plan and the only exchanges are
-    # the tombstone rollup + the bounded segment-grain regroup
-    plan = (
-        current_index(spark, idx_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Generate" not in plan, plan
-
-    # width mismatch on an existing index raises instead of mis-bucketing
-    with pytest.raises(ValueError, match="segment_size"):
-        incremental_index_update(
-            spark, land, idx_dir, segment_size=8, max_files_per_trigger=1
-        )
-
-
-def test_index_update_per_batch_cost_is_batch_sized(spark, tmp_path):
-    """The segment dirs are append-only: batch N's directory contains
-    ONLY batch N's docs — the O(batch)-per-batch property."""
-    import os
-
-    from index_search_monorepo_spark.streaming.index_update import (
-        incremental_index_update,
-    )
-
-    land = str(tmp_path / "land")
-    idx_dir = str(tmp_path / "idx")
-    _write_docs_file(
-        spark, land, [(1, "one uno"), (2, "two dos")], "b1"
-    )
-    incremental_index_update(
-        spark, land, idx_dir, segment_size=4, max_files_per_trigger=1
-    )
-    _write_docs_file(spark, land, [(3, "three tres")], "b2")
-    incremental_index_update(
-        spark, land, idx_dir, segment_size=4, max_files_per_trigger=1
-    )
-    segs = sorted(os.listdir(f"{idx_dir}/segments"))
-    assert len(segs) == 2
-    last = spark.read.parquet(f"{idx_dir}/segments/{segs[-1]}")
-    docs_in_last = {
-        p["doc_id"]
-        for r in last.collect()
-        for p in r["postings"]
-    }
-    assert docs_in_last == {3}
-
-
 def test_streaming_hll_sketch_parity(spark, tmp_path):
     """The sketch family is streaming-legal as-is: hll_sketch is ONE
     groupBy(bucket).max — a commutative/idempotent aggregation Spark can
