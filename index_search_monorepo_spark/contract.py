@@ -3503,7 +3503,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shingle -> k x md5 chain three times behind three separate spreads
     # (share-one-banded-frame pattern; bands derive from the persisted
     # signature frame with k cheap md5s). Same band spec, same results.
-    sigs = D._persist(D.minhash_signatures(docs, k=4), None)
+    sigs = SKW.persist(D.minhash_signatures(docs, k=4))
     bands = D.bands_from_sigs(sigs, k=4, band_size=2)
     idx = D.lsh_band_index(
         None, k=4, band_size=2,
@@ -3725,7 +3725,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     stripped = D.strip_frequent_lines(
         planted, text_col="ldoc_text", min_docs=3
     )
-    base = D._spread(stripped).select(
+    base = SKW.spread_small_scan(stripped).select(
         "doc_id",
         D.simhash_expr(F.col("text")).alias("simhash"),
         F.md5(F.col("ldoc_text_cleaned")).alias("line_cleaned_md5"),
@@ -5286,8 +5286,8 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id", "text", "lang", "n_chars")
     )
     lang = TS.with_lang_id_full(base, keep=("text", "lang", "n_chars"))
-    counts = D._persist(
-        LMOD.train_unigram_counts(docs, train_pmille=500, top_k=16), None
+    counts = SKW.persist(
+        LMOD.train_unigram_counts(docs, train_pmille=500, top_k=16)
     )
     lm = LMOD.with_lm_nll(
         lang,
@@ -5797,10 +5797,13 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so they ride the fingerprint projection and the join-back is a
     # tiny contamination-proportional broadcast instead of a
     # doc-cardinality one (4 documents scans -> 2; interleaved best-of-5
-    # 1.43 s -> 1.15 s at 50k docs).
-    base = D._persist(
-        SKW.spread_small_scan(docs.select("doc_id", "text", "source")), None
-    )
+    # 1.43 s -> 1.15 s at 50k docs). Scale guard: the base is persisted
+    # only when the spread ran; a many-split corpus is scanned by each
+    # consumer instead of cached whole.
+    slim = docs.select("doc_id", "text", "source")
+    base = SKW.spread_small_scan(slim)
+    if base is not slim:
+        base = SKW.persist(base)
     hits = D.decontaminate(base, bench, n=8, hits_only=True, spread=False)
     # NEW r5: leakage-safe split — the REAL with_group_split keyed on the
     # source feed (group members can never straddle train/eval); join-free:

@@ -24,6 +24,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from index_search_monorepo_spark.operators.skew import (
+    persist,
+    spread_small_scan,
+)
 from index_search_monorepo_spark.operators.textstats import (
     word_ngrams_from_tokens,
 )
@@ -31,30 +35,6 @@ from index_search_monorepo_spark.operators.textstats import (
 SIMHASH_BITS = 32
 MINHASH_K = 8
 _HEX = "0123456789abcdef"
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition before compute-heavy narrow transformations.
-
-    A small parquet scan yields few input splits, so without this every
-    md5-over-shingles expression runs on 1-3 cores regardless of cluster
-    size (measured 6x wall-time difference at local[32]). Partition count =
-    spark.sql.shuffle.partitions, i.e. sized to the cluster, not to input
-    bytes. At 100 TB the scan already has thousands of splits and the
-    shuffle is cheap relative to the hashing it parallelizes.
-
-    Hashes a deterministic doc_id-derived key when present instead of
-    round-robin (r6): skips round-robin's per-task input sort
-    (sortBeforeRepartition) and is retry-deterministic by construction
-    (the guide-recommended pmod(xxhash64(id), 100*n) form)."""
-    spark = df.sparkSession
-    try:
-        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        n = spark.sparkContext.defaultParallelism
-    if "doc_id" in df.columns:
-        return df.repartition(n, F.pmod(F.xxhash64("doc_id"), F.lit(100 * n)))
-    return df.repartition(n)
 
 
 def content_key_expr(text: Column, prefix_len: int | None = None) -> Column:
@@ -110,26 +90,6 @@ def word_shingles_expr(text: Column, n: int = 4) -> Column:
     return F.element_at(F.transform(F.array(toks_once), build), 1)
 
 
-def _persist(df: DataFrame, registry: list | None) -> DataFrame:
-    """Persist MEMORY_AND_DISK and record the cached frame in the caller's
-    cache registry (the documented unpersist/lifecycle path: operators that
-    persist shared frames append them here; the caller releases them with
-    `release_caches(registry)` once the results are materialized —
-    long-lived sessions otherwise accumulate cached relations)."""
-    from pyspark import StorageLevel
-
-    out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    if registry is not None:
-        registry.append(out)
-    return out
-
-
-def release_caches(registry: list) -> None:
-    """Unpersist every frame an operator registered (non-blocking)."""
-    while registry:
-        registry.pop().unpersist(blocking=False)
-
-
 def _maybe_broadcast(df: DataFrame, broadcast: bool | str) -> DataFrame:
     """broadcast=True forces a broadcast hint; 'auto' (default) leaves the
     strategy to the planner/AQE, which broadcasts when the runtime size is
@@ -143,22 +103,19 @@ def _exploded_shingles(
     text_col: str,
     n: int,
     max_df: int | None,
-    persist: bool = False,
     broadcast_stoplist: bool | str = "auto",
-    cache_registry: list | None = None,
 ) -> DataFrame:
-    sh = _spread(df).select(
+    sh = spread_small_scan(df).select(
         "doc_id", F.explode(word_shingles_expr(F.col(text_col), n)).alias("shingle")
     )
     if max_df is not None:
-        if persist:
-            # the pre-cap frame feeds the df-count aggregate AND (through
-            # the cheap anti-join below) every downstream consumer; without
-            # persist each re-runs the tokenize+shingle explode. Only THIS
-            # frame is persisted — the capped frame derives from it per
-            # consumer (ADVICE r02: persisting both roughly doubled the
-            # dedup working set).
-            sh = _persist(sh, cache_registry)
+        # the pre-cap frame feeds the df-count aggregate AND (through the
+        # cheap anti-join below) every downstream consumer; without persist
+        # each re-runs the tokenize+shingle explode. Only THIS frame is
+        # persisted — the capped frame derives from it per consumer
+        # (ADVICE r02: persisting both roughly doubled the dedup working
+        # set).
+        sh = persist(sh)
         # stop-shingle removal: drop keys whose document frequency explodes
         # the pair join (skew cap). Window-free: aggregate + join back.
         # The stop-list is NOT force-broadcast (VERDICT r02 wrong #2): at
@@ -179,9 +136,7 @@ def ngram_candidate_pairs(
     n: int = 4,
     min_intersection: int = 2,
     max_df: int | None = 1000,
-    persist_shingles: bool = True,
     broadcast_small_sides: bool | str = "auto",
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """n-gram Jaccard candidates: pairs sharing >= min_intersection shingles,
     with exact integer (intersection, union) counts.
@@ -201,29 +156,21 @@ def ngram_candidate_pairs(
     plenty of rarer shingles. Uncapped mode is an explicit opt-in
     (max_df=None).
 
-    persist_shingles=True pins the (doc_id, shingle) frame: it is consumed
-    FOUR times (both self-join sides + the per-doc size aggregate + the
-    df-count aggregate), and without persist each consumer re-runs the full
-    scan -> tokenize -> shingle -> explode chain — 4x the dominant cost at
-    corpus scale (plan-audited, round 2). Exactly ONE frame is cached: the
-    pre-cap shingles when max_df is set (consumers re-derive the cheap
-    anti-join from cache), the shingle frame itself otherwise (ADVICE r02 —
-    caching both pre- and post-cap doubled the working set). The frame is
-    ~shingles-per-doc x corpus rows; MEMORY_AND_DISK spills under
-    pressure. Disable on clusters where re-compute beats spill-to-disk.
-    Pass cache_registry=[] to collect the persisted frame(s) and release
-    them with `release_caches` after materializing results."""
+    The (doc_id, shingle) frame is persisted (skew.persist): it is
+    consumed FOUR times (both self-join sides + the per-doc size aggregate
+    + the df-count aggregate), and without persist each consumer re-runs
+    the full scan -> tokenize -> shingle -> explode chain — 4x the
+    dominant cost at corpus scale (plan-audited, round 2). Exactly ONE
+    frame is cached: the pre-cap shingles when max_df is set (consumers
+    re-derive the cheap anti-join from cache), the shingle frame itself
+    otherwise (ADVICE r02 — caching both pre- and post-cap doubled the
+    working set). The frame is ~shingles-per-doc x corpus rows;
+    MEMORY_AND_DISK spills under pressure."""
     sh = _exploded_shingles(
-        df,
-        text_col,
-        n,
-        max_df,
-        persist=persist_shingles,
-        broadcast_stoplist=broadcast_small_sides,
-        cache_registry=cache_registry,
+        df, text_col, n, max_df, broadcast_stoplist=broadcast_small_sides
     )
-    if persist_shingles and max_df is None:
-        sh = _persist(sh, cache_registry)
+    if max_df is None:
+        sh = persist(sh)
     sizes = sh.groupBy("doc_id").agg(F.count("*").cast("long").alias("n_sh"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -262,22 +209,13 @@ def near_duplicate_pairs_jaccard(
     n: int = 4,
     threshold_pct: int = 80,
     max_df: int | None = 1000,
-    persist_shingles: bool = True,
     broadcast_small_sides: bool | str = "auto",
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Jaccard >= threshold_pct/100, decided in integer arithmetic
     (100*inter >= pct*union) so the oracle compare is exact. Stop-shingle
     cap defaults ON (see ngram_candidate_pairs)."""
     cand = ngram_candidate_pairs(
-        df,
-        text_col,
-        n,
-        1,
-        max_df,
-        persist_shingles,
-        broadcast_small_sides,
-        cache_registry,
+        df, text_col, n, 1, max_df, broadcast_small_sides
     )
     return cand.filter(
         F.col("inter_cnt") * 100 >= F.col("union_cnt") * threshold_pct
@@ -294,7 +232,6 @@ def decontaminate(
     broadcast_benchmark: bool | str = "auto",
     hits_only: bool = False,
     spread: bool = True,
-    registry: list | None = None,
 ) -> DataFrame:
     """Benchmark decontamination: flag corpus documents that share word
     n-gram shingles with an evaluation/benchmark set (the GPT-3 appendix-C
@@ -321,7 +258,7 @@ def decontaminate(
     contamination-proportional frame and coalesces, instead of paying an
     extra corpus scan + a doc-cardinality broadcast build per
     materialization (r6; the with_adaptive_quality stats_df convention).
-    spread=False skips the internal round-robin repartition when the
+    spread=False skips the internal spread_small_scan when the
     caller passes an already-spread (or many-split) frame, so one
     exchange serves every consumer of that frame. hits_only=True carries
     no `contaminated` flag, so it refuses any min_hits other than 1
@@ -336,16 +273,15 @@ def decontaminate(
     # suites are bounded (MBs), and unpersisted every materialization
     # replays the benchmark scan + explode + distinct before the
     # (per-run, unavoidable) broadcast hash-relation build
-    bench_sh = _persist(
+    bench_sh = persist(
         benchmark.select(
             F.explode(
                 word_shingles_expr(F.col(bench_text_col), n)
             ).alias("shingle")
         )
-        .distinct(),
-        registry,
+        .distinct()
     )
-    doc_sh = (_spread(docs) if spread else docs).select(
+    doc_sh = (spread_small_scan(docs) if spread else docs).select(
         "doc_id",
         F.explode(word_shingles_expr(F.col(text_col), n)).alias("shingle"),
     )
@@ -381,7 +317,6 @@ def minhash_signatures(
     text_col: str = "text",
     k: int = MINHASH_K,
     n: int = 4,
-    spread: bool = True,
 ) -> DataFrame:
     """MinHash: sig_i = min over shingles of md5(i || '|' || shingle).
     Per-row array work; k columns sig_0..sig_{k-1}.
@@ -391,7 +326,7 @@ def minhash_signatures(
     referenced k times, so the k signature columns share one tokenize +
     shingle + distinct pass instead of recomputing it per column (measured
     27x at k=8)."""
-    base = _spread(df) if spread else df
+    base = spread_small_scan(df)
     shingled = base.withColumn("_sh", word_shingles_expr(F.col(text_col), n))
     def sig_fn(i: int):
         return lambda s: F.md5(F.concat(F.lit(f"{i}|"), s))
@@ -409,7 +344,6 @@ def lsh_bands(
     k: int = MINHASH_K,
     band_size: int = 2,
     n: int = 4,
-    spread: bool = True,
     keep: tuple[str, ...] = (),
 ) -> DataFrame:
     """The ONE LSH band/bucket spec: (doc_id, band_no, bucket, *keep) with
@@ -418,10 +352,10 @@ def lsh_bands(
     join (lsh_candidate_pairs), the persisted band index
     (lsh_band_index / incremental_lsh_dedup), and the streaming claimer
     (streaming/incremental.streaming_lsh_bands) so buckets from all
-    three paths are directly comparable. Pure expressions (streaming-
-    legal when spread=False); the shingle array binds once behind a
+    three paths are directly comparable. Pure expressions on a streaming
+    frame (the spread skips it); the shingle array binds once behind a
     Project boundary (CLAUDE.md lesson #1)."""
-    base = _spread(df) if spread else df
+    base = spread_small_scan(df)
     shingled = base.withColumn("_sh", word_shingles_expr(F.col(text_col), n))
 
     def sig_fn(i: int):
@@ -483,8 +417,6 @@ def lsh_candidate_pairs(
     k: int = MINHASH_K,
     band_size: int = 2,
     n: int = 4,
-    persist_bands: bool = True,
-    cache_registry: list | None = None,
     via: str = "join",
 ) -> DataFrame:
     """MinHash+LSH: band the k-wide signature into k/band_size bands, bucket
@@ -502,14 +434,10 @@ def lsh_candidate_pairs(
     frame read) becomes the right plan; an earlier single-window win for
     'group' did not reproduce (measure, don't assume).
 
-    persist_bands=True pins the tiny (doc_id, band_no, bucket) frame:
-    without persist every consumer re-runs the dominant tokenize ->
-    shingle -> k x md5 MinHash pass (plan-audited, round 2). Pass
-    cache_registry=[] and call `release_caches` after materializing to
-    free the cached frame."""
-    bands = lsh_bands(df, text_col, k, band_size, n)
-    if persist_bands:
-        bands = _persist(bands, cache_registry)
+    The tiny (doc_id, band_no, bucket) frame is persisted: without it
+    every consumer re-runs the dominant tokenize -> shingle -> k x md5
+    MinHash pass (plan-audited, round 2)."""
+    bands = persist(lsh_bands(df, text_col, k, band_size, n))
     if via == "join":
         a = bands.alias("a")
         b = bands.alias("b")
@@ -585,7 +513,7 @@ def simhash_expr(text: Column, bits: int = SIMHASH_BITS) -> Column:
 
 
 def with_simhash(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return _spread(df).select(
+    return spread_small_scan(df).select(
         "doc_id", simhash_expr(F.col(text_col)).alias("simhash")
     )
 
@@ -596,8 +524,6 @@ def simhash_near_dup_pairs(
     bits: int = SIMHASH_BITS,
     n_bands: int = 4,
     max_hamming: int = 2,
-    persist_bands: bool = True,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """SimHash near-duplicate pairs via banded hamming join.
 
@@ -630,11 +556,10 @@ def simhash_near_dup_pairs(
             )
         ).alias("bb"),
     ).select("doc_id", "simhash", "bb.band_no", "bb.band_val")
-    if persist_bands:
-        # both self-join sides consume the frame; without persist each
-        # recomputes the per-token md5 fold (same rationale as
-        # lsh_candidate_pairs; plan-audited, round 2)
-        bands = _persist(bands, cache_registry)
+    # both self-join sides consume the frame; without persist each
+    # recomputes the per-token md5 fold (same rationale as
+    # lsh_candidate_pairs; plan-audited, round 2)
+    bands = persist(bands)
     a = bands.alias("a")
     b = bands.alias("b")
     hamming = F.bit_count(
@@ -683,9 +608,7 @@ def duplicate_clusters(
        PAIR set (docs with no near-dup pair never enter the loop), never
        per-row driver work.
     """
-    from pyspark import StorageLevel
-
-    edges = (
+    edges = persist(
         pairs.select(
             F.col(doc_a).cast("long").alias("src"),
             F.col(doc_b).cast("long").alias("dst"),
@@ -697,7 +620,6 @@ def duplicate_clusters(
             )
         )
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # label[d] starts as min(d, min neighbor) — one round for free
     labels = (
@@ -954,7 +876,6 @@ def duplicate_passages(
     text_col: str = "text",
     k: int = 20,
     min_docs: int = 2,
-    registry: list | None = None,
 ) -> DataFrame:
     """Find duplicated PASSAGES — maximal runs of word positions covered
     by k-gram shingles that occur in >= `min_docs` distinct documents.
@@ -985,9 +906,9 @@ def duplicate_passages(
         F.split(F.col(text_col), "[ \\t\\n\\r\\f]+"),
         lambda t: t != F.lit(""),
     )
-    bound = _spread(df.select("doc_id", F.col(text_col))).withColumn(
-        "_toks", toks
-    )
+    bound = spread_small_scan(
+        df.select("doc_id", F.col(text_col))
+    ).withColumn("_toks", toks)
     # one row per shingle START position: (doc_id, pos, md5(shingle))
     # sequence(0, -1) would generate a DESCENDING [0, -1] in Spark, so
     # docs shorter than k must take the empty-array branch explicitly
@@ -1006,7 +927,7 @@ def duplicate_passages(
             )
         ).alias("pos", "h"),
     )
-    grams = _persist(grams, registry)
+    grams = persist(grams)
     hot = (
         grams.select("doc_id", "h")
         .groupBy("doc_id", "h")
@@ -1110,7 +1031,6 @@ def incremental_lsh_dedup(
     k: int = MINHASH_K,
     band_size: int = 2,
     n: int = 4,
-    cache_registry: list | None = None,
     bands: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Dedup a delta against the corpus WITHOUT rescanning the corpus:
@@ -1142,9 +1062,7 @@ def incremental_lsh_dedup(
     if bands is not None:
         nb = bands
     else:
-        nb = _persist(
-            lsh_bands(new_docs, text_col, k, band_size, n), cache_registry
-        )
+        nb = persist(lsh_bands(new_docs, text_col, k, band_size, n))
     idx = index.select(
         "band_no", "bucket", F.col("first_doc_id").alias("_idx_first")
     )

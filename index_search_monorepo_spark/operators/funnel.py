@@ -44,6 +44,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from index_search_monorepo_spark.operators.temporal import _us
+from index_search_monorepo_spark.operators.skew import persist
 
 __all__ = [
     "funnel_steps",
@@ -431,7 +432,6 @@ def _ranged_ntile(
     n_tiles: int,
     alias: str,
     num_partitions: int,
-    registry: list | None,
 ) -> DataFrame:
     """Exact global ntile WITHOUT a single-partition sort (r6; VERDICT
     r05 wrong #1): repartitionByRange on the total order, row_number
@@ -446,13 +446,10 @@ def _ranged_ntile(
     ceil(n/t) rows in the first n%t tiles and floor(n/t) in the rest,
     assigned in order. Triggers one small job per call (the chunk-count
     pass over the persisted slim frame); rfm is a batch operator."""
-    from index_search_monorepo_spark.operators.dedup import _persist
-
-    ranged = _persist(
+    ranged = persist(
         frame.repartitionByRange(num_partitions, *order_cols).withColumn(
             "_pid", F.spark_partition_id()
-        ),
-        registry,
+        )
     )
     cnt_rows = (
         ranged.groupBy("_pid").agg(F.count("*").alias("_n")).collect()
@@ -505,7 +502,6 @@ def rfm_scores(
     value_col: str = "value",
     strategy: str = "ranged",
     num_partitions: int | None = None,
-    registry: list | None = None,
 ) -> DataFrame:
     """RFM customer segmentation: one row per user with
     (user_col, recency_us, frequency, monetary_e4, r_q, f_q, m_q,
@@ -523,8 +519,7 @@ def rfm_scores(
     bit-identical to the exact global ntile (pinned by
     tests/test_funnel.py and the ordered_dedup_events gate ride).
     strategy='global' keeps the one-sort reference plan (fine to ~1e7
-    users; the r5 shape). registry receives the per-pass persisted slim
-    frames (dedup release_caches convention)."""
+    users; the r5 shape)."""
     if n_tiles < 2:
         raise ValueError(f"n_tiles must be >= 2, got {n_tiles}")
     per_user = df.groupBy(user_col).agg(
@@ -542,13 +537,13 @@ def rfm_scores(
             df.sparkSession.conf.get("spark.sql.shuffle.partitions")
         )
         scored = _ranged_ntile(
-            per_user, [F.asc("recency_us"), u], n_tiles, "r_q", np_, registry
+            per_user, [F.asc("recency_us"), u], n_tiles, "r_q", np_
         )
         scored = _ranged_ntile(
-            scored, [F.desc("frequency"), u], n_tiles, "f_q", np_, registry
+            scored, [F.desc("frequency"), u], n_tiles, "f_q", np_
         )
         scored = _ranged_ntile(
-            scored, [F.desc("monetary_e4"), u], n_tiles, "m_q", np_, registry
+            scored, [F.desc("monetary_e4"), u], n_tiles, "m_q", np_
         )
         return scored.select(
             user_col,

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from index_search_monorepo_spark.operators.dedup import duplicate_clusters
+from index_search_monorepo_spark.operators.skew import persist
 
 __all__ = [
     "blocked_candidate_pairs",
@@ -144,7 +145,6 @@ def sorted_neighborhood_pairs(
     sort_col: str,
     window: int = 3,
     num_partitions: int | None = None,
-    registry: list | None = None,
 ) -> DataFrame:
     """SNM candidate pairs: every row paired with its `window`
     successors in the global (sort_col, id_col) order. Returns
@@ -153,12 +153,7 @@ def sorted_neighborhood_pairs(
 
     Output is independent of `num_partitions` (pair completeness across
     chunk seams is handled by the boundary pass — see module
-    docstring); defaults to spark.sql.shuffle.partitions.
-
-    registry (ADVICE r05 #3): receives the persisted `ranged` frame (the
-    dedup release_caches convention) so repeated callers — bench loops,
-    the semi_join_parts gate — can release the cache instead of
-    accumulating partitions until executor eviction."""
+    docstring); defaults to spark.sql.shuffle.partitions."""
     if window < 1:
         raise ValueError(f"window must be >= 1, got {window}")
     np_ = num_partitions or int(
@@ -170,13 +165,10 @@ def sorted_neighborhood_pairs(
     # each consumer would let the two passes see different chunkings
     # (the seam-completeness argument needs ONE chunking). Slim
     # (id, sort) rows only.
-    from index_search_monorepo_spark.operators.dedup import _persist
-
-    ranged = _persist(
+    ranged = persist(
         slim.repartitionByRange(np_, "_s", "_id").withColumn(
             "_pid", F.spark_partition_id()
-        ),
-        registry,
+        )
     )
     w_pid = Window.partitionBy("_pid").orderBy("_s", "_id")
     leads = F.array(

@@ -62,6 +62,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from index_search_monorepo_spark.operators.packing import hash_sample_pmille
+from index_search_monorepo_spark.operators.skew import persist
 from index_search_monorepo_spark.operators.textstats import (
     _check_keep,
     tokens_expr,
@@ -142,7 +143,6 @@ def with_lm_nll(
     text_col: str = "text",
     strategy: str = "join",
     keep: tuple[str, ...] = (),
-    registry: list | None = None,
 ) -> DataFrame:
     """Score each document against a trained unigram table
     (`train_unigram_counts` output). Adds, at doc grain (every input row
@@ -169,7 +169,7 @@ def with_lm_nll(
     tests/test_lm.py)."""
     _check_keep(keep, ("doc_id", *_LM_PRODUCED))
     if strategy == "map":
-        return _score_map(df, counts, text_col, keep, registry)
+        return _score_map(df, counts, text_col, keep)
     if strategy == "join":
         scored = _score_join(df, counts, text_col)
     elif strategy == "udf":
@@ -193,20 +193,17 @@ def _score_map(
     counts: DataFrame,
     text_col: str,
     keep: tuple[str, ...],
-    registry: list | None = None,
 ) -> DataFrame:
     """Join-free scorer: one-row broadcast (token -> nll) map + per-row
     fold. Output values are bit-identical to _score_join (integer
     arithmetic throughout): in-vocab tokens add their nll, OOV tokens add
     the shared oov_nll, empty/null docs score all-zeros exactly like the
     join path's left-join-miss coalesce."""
-    from index_search_monorepo_spark.operators.dedup import _persist
-
     nll = _nll_table(counts)
     # r6: persist the ONE-ROW map frame — unpersisted, each
     # materialization replays the nll-table micro-stages above the
     # (caller-persisted) counts; cached, it reads one row
-    one_row = _persist(
+    one_row = persist(
         nll.agg(
             F.map_from_entries(
                 F.collect_list(F.struct(F.col("token"), F.col("nll")))
@@ -216,8 +213,7 @@ def _score_map(
             F.coalesce(F.max("oov_nll"), F.lit(0).cast("long")).alias(
                 "_lm_oov_nll"
             ),
-        ),
-        registry,
+        )
     )
     toks = F.coalesce(
         tokens_expr(F.col(text_col)),

@@ -43,6 +43,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from index_search_monorepo_spark.operators.skew import persist
+
 # real numpy decode for these; everything else hits the stub fallback
 REAL_FORMATS = frozenset({"ppm", "bmp", "tiff", "png", "gif", "jpg"})
 DECODE_IS_STUB = True  # still true for H.26x-family codec'd video (no
@@ -1960,7 +1962,6 @@ def phash_near_dup_pairs(
     max_hamming: int = 6,
     bands: int = 8,
     include_degenerate: bool = False,
-    registry: list | None = None,
 ) -> DataFrame:
     """Near-duplicate image pairs: hamming(phash_a, phash_b) <= threshold.
 
@@ -2000,10 +2001,8 @@ def phash_near_dup_pairs(
     # kernel, that is a config-dependent optimization — without it every
     # image would decode twice through the pure-Python codecs (the
     # simhash_near_dup_pairs twin in dedup.py carries the same persist
-    # for the same reason; registry = the cache-release lifecycle)
-    from index_search_monorepo_spark.operators.dedup import _persist
-
-    banded = _persist(banded, registry)
+    # for the same reason)
+    banded = persist(banded)
     a, b2 = banded.alias("a"), banded.alias("b")
     hamming = F.bit_count(
         F.col("a.phash").bitwiseXOR(F.col("b.phash"))
@@ -2100,7 +2099,6 @@ def audio_near_dup_pairs(
     max_hamming: int = 6,
     bands: int = 8,
     include_degenerate: bool = False,
-    registry: list | None = None,
 ) -> DataFrame:
     """Near-duplicate audio pairs — the image banded-hamming joiner over
     the envelope hash (same guarantee: hamming <= bands-1 always found).
@@ -2118,5 +2116,4 @@ def audio_near_dup_pairs(
         max_hamming=max_hamming,
         bands=bands,
         include_degenerate=include_degenerate,
-        registry=registry,
     )

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from index_search_monorepo_spark.operators.skew import persist
+
 # number of leading md5 hex digits folded into the integer hash key:
 # 6 digits = 24 bits, safely inside exact BIGINT arithmetic in both engines
 HASH_HEX_DIGITS = 6
@@ -112,7 +114,6 @@ def with_mixture_sampling(
     rate_cap_pmille: int = 8000,
     salt: str = "mix",
     key_col: str = "doc_id",
-    registry: list | None = None,
 ) -> DataFrame:
     """Temperature-based mixture reweighting (alpha = 0.5, the multilingual
     sampling rule of XLM-R / mBERT): strata (languages, domains, sources)
@@ -156,15 +157,9 @@ def with_mixture_sampling(
     # re-evaluated once per consumer: measured 3 full corpus passes and a
     # 10x wall hit when df carries expensive derived columns (lang_id's
     # trigram profile, r5). Persisting the slim rollup caps the upstream
-    # cost at ONE pruned pass regardless of fan-out; `registry` is the
-    # standard cache-lifecycle hook (operators/dedup.py convention).
-    from index_search_monorepo_spark.operators.dedup import _persist
-
-    counts = _persist(
-        df.groupBy(stratum_col).agg(
-            F.count("*").cast("long").alias("_n_s")
-        ),
-        registry,
+    # cost at ONE pruned pass regardless of fan-out.
+    counts = persist(
+        df.groupBy(stratum_col).agg(F.count("*").cast("long").alias("_n_s"))
     )
     weights = counts.withColumn(
         "_w_s", isqrt_cols(F.col("_n_s") * F.lit(1_000_000))
@@ -207,15 +202,14 @@ def with_mixture_sampling(
     # crossJoin -> map-agg micro-stage chain above the cached counts
     # (fixed scheduler latency per run, corpus-independent); cached,
     # a steady-state run reads one row
-    rate_map = _persist(
+    rate_map = persist(
         rates.filter(F.col(stratum_col).isNotNull()).agg(
             F.map_from_entries(
                 F.collect_list(
                     F.struct(F.col(stratum_col), F.col("mix_rate_pmille"))
                 )
             ).alias("_mix_rates")
-        ),
-        registry,
+        )
     )
     out = (
         df.crossJoin(F.broadcast(rate_map))

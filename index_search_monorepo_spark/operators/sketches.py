@@ -42,8 +42,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from index_search_monorepo_spark.operators.dedup import _persist
 from index_search_monorepo_spark.operators.lm import bitlen_expr, bitlen_sql
+from index_search_monorepo_spark.operators.skew import persist
 
 HLL_HEX_DIGITS = 12  # 48 hash bits; BIGINT-exact in both engines
 HLL_BITS = 4 * HLL_HEX_DIGITS
@@ -1155,7 +1155,6 @@ def heavy_hitters_exact(
     key_col: str,
     k: int = DEFAULT_MG_K,
     max_candidates: int = 100_000,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Two-pass exact heavy hitters: (key, cnt, guaranteed) for every
     MG candidate, where guaranteed = cnt*(k+1) > N (integer, no
@@ -1173,8 +1172,7 @@ def heavy_hitters_exact(
     (<= input partitions x k, guarded by max_candidates) — the repo's
     broadcast-dim pattern. The tiny grouped rollup is persisted (its
     lineage is the full pass-2 scan and BOTH the output and the total-N
-    broadcast read it); pass cache_registry=[] and release with
-    dedup.release_caches once materialized."""
+    broadcast read it)."""
     _mg_check(k)
     cand_rows = mg_candidates(df, key_col, k).select("key").distinct()
     cands = [r["key"] for r in cand_rows.limit(max_candidates + 1).collect()]
@@ -1193,7 +1191,7 @@ def heavy_hitters_exact(
         )
         .agg(F.count("*").cast("long").alias("cnt"))
     )
-    grouped = _persist(grouped, cache_registry)
+    grouped = persist(grouped)
     total = grouped.agg(F.sum("cnt").cast("long").alias("n"))
     return (
         grouped.filter(F.col("key").isNotNull())

@@ -1,5 +1,6 @@
 """O13 — explicit skew handling (north rule: salted repartitioning for
-oversized many-page volumes).
+oversized many-page volumes), and the package's one placement and
+storage-level policy.
 
 The reference has none (one doc = one queue message regardless of page count;
 SURVEY.md §4 O13); AQE's skew-join splitting cannot split a single fat row of
@@ -9,12 +10,18 @@ UDF work, so we place rows deliberately:
    so co-occurring fat rows do not pile into one partition; the partition
    count comes from scan file metadata (or an explicit parameter) — never
    from a driver-side pre-scan job.
+ - `spread_small_scan` is the one spread before compute-heavy narrow work.
+ - `persist` is the one cache call: every operator that pins a shared
+   frame goes through it. Cached frames live until the session owner's
+   `spark.catalog.clearCache()` (operators return lazy frames, so no
+   operator can know when its caller is done with them).
  - the heavy path for 2000-page volumes lives in
    extraction.with_ocr_skew_aware (explode → distribute → reassemble).
 """
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -44,13 +51,29 @@ def _estimated_input_bytes(df: DataFrame) -> int | None:
     return int(total * len(files) / len(sample))
 
 
+def persist(df: DataFrame) -> DataFrame:
+    """Pin a frame that several consumers read, MEMORY_AND_DISK (spills
+    under pressure instead of recomputing). Released by the session
+    owner's `spark.catalog.clearCache()`."""
+    return df.persist(StorageLevel.MEMORY_AND_DISK)
+
+
 def spread_small_scan(df: DataFrame, key: str | None = "doc_id") -> DataFrame:
     """Repartition a few-split source before compute-heavy narrow work
     (pandas UDFs, hash chains). A dimension table written as one parquet
     file scans as ONE split, so everything downstream of it runs on one
     core regardless of cluster size — a serial stage that caps N->4N
     scaling (Amdahl) long before data volume matters. Partition count
-    = spark.sql.shuffle.partitions, i.e. sized to the cluster.
+    = spark.sql.shuffle.partitions, i.e. sized to the cluster. Returns
+    `df` itself when it skips, so a caller can tell whether it spread.
+
+    Skips when the input already has >= that many splits (a many-file
+    corpus is balanced by its scan). The split count is asked only of a
+    plan without AQE: asking an AdaptiveSparkPlanExec (any frame holding
+    an exchange or a cache) for its partitions runs its query stages —
+    Spark jobs at plan-build time — so such a frame is spread without
+    asking. A streaming frame is returned unchanged: it has no executed
+    plan to ask, and streaming callers keep to pure expressions.
 
     When `key` names an existing column the spread hashes a DETERMINISTIC
     derived key (pmod(xxhash64(key), 100*n) — far more distinct values
@@ -63,22 +86,28 @@ def spread_small_scan(df: DataFrame, key: str | None = "doc_id") -> DataFrame:
     back to round-robin when the key column is absent.
 
     xxhash64(NULL) is the hash seed, so NULL keys would all land in ONE
-    partition; a NULL key hashes its row's monotonically_increasing_id
-    instead (row-unique, and deterministic for a given input split
-    order). Non-null keys keep their hash. Catalyst counts that id as
-    nondeterministic, so a filter above the spread now stops at the
-    Project computing it — still below the exchange, but no longer
-    pushed into the parquet scan."""
+    partition; a NULL key hashes a seeded per-row rand(0) instead
+    (deterministic for a given input split order;
+    monotonically_increasing_id would do the same but is refused in a
+    streaming query, which a static frame joined to a stream becomes
+    part of). Non-null keys keep their hash. Catalyst
+    counts rand as nondeterministic, so a filter above the spread now
+    stops at the Project computing it — still below the exchange, but
+    no longer pushed into the parquet scan."""
+    if df.isStreaming:
+        return df
     spark = df.sparkSession
     try:
         n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
         n = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= n:
+    plan = df._jdf.queryExecution().executedPlan()
+    adaptive = plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec"
+    if not adaptive and df.rdd.getNumPartitions() >= n:
         return df
     if key and key in df.columns:
         k = F.col(key)
-        h = F.when(k.isNull(), F.xxhash64(F.monotonically_increasing_id()))
+        h = F.when(k.isNull(), F.xxhash64(F.rand(0)))
         return df.repartition(
             n, F.pmod(h.otherwise(F.xxhash64(k)), F.lit(100 * n))
         )

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from index_search_monorepo_spark.operators.skew import persist
+
 # tiny deterministic "stopword" table for the language heuristic. The
 # classification rule is intentionally simple/deterministic — the point of
 # the oracle check is the distributed computation, not linguistic power.
@@ -796,7 +798,6 @@ def with_adaptive_quality(
     hi: int = 1024,
     n_buckets: int = 64,
     stats_df: DataFrame | None = None,
-    registry: list | None = None,
 ) -> DataFrame:
     """Adds ``adpt_thr`` (the row's group threshold) and ``adpt_keep``
     (BIGINT 1 when score >= threshold) — flag-don't-drop so the verdict
@@ -818,8 +819,6 @@ def with_adaptive_quality(
     that lineage (Arrow stages, derived columns) into the histogram
     rollup. Must contain score_col and group_col with the same values at
     the same grain; defaults to df (unchanged semantics)."""
-    from index_search_monorepo_spark.operators.dedup import _persist
-
     thr = adaptive_quality_threshold(
         stats_df if stats_df is not None else df,
         score_col, group_col, q_pmille, lo, hi, n_buckets
@@ -829,13 +828,12 @@ def with_adaptive_quality(
     # corpus pass over stats_df) plus its agg micro-stages; cached, a
     # steady-state run reads one row (lesson #11 applied to the end of
     # the rollup chain, not just its base)
-    thr_map = _persist(
+    thr_map = persist(
         thr.filter(F.col(group_col).isNotNull()).agg(
             F.map_from_entries(
                 F.collect_list(F.struct(F.col(group_col), F.col("score_thr")))
             ).alias("_adpt_thrs")
-        ),
-        registry,
+        )
     )
     out = (
         df.crossJoin(F.broadcast(thr_map))

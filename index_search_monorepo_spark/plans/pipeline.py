@@ -170,7 +170,10 @@ def run_extraction_job(
     input_snapshot_id: str | None = None,
 ) -> dict:
     """Checkpointed, resumable production entry point: one Spark write
-    over an uncached plan (plus the error-sink append)."""
+    over an uncached plan (plus the error-sink write). `errors/` is
+    overwritten, not appended: the error set is a function of the corpus,
+    which a resume already assumes unchanged, so a re-run must not add a
+    second copy of it."""
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     check_bucket_count(output_dir, n_buckets)
@@ -178,7 +181,7 @@ def run_extraction_job(
     docs, errors = extract_documents(spark, tables)
     docs = with_bucket(docs, n_buckets, doc_id_col="id")
     docs = pending_only(docs, spark, output_dir)
-    errors.write.mode("append").parquet(str(Path(output_dir) / "errors"))
+    errors.write.mode("overwrite").parquet(str(Path(output_dir) / "errors"))
     snapshot = input_snapshot_id or f"corpus:{corpus_dir}"
     return run_checkpointed(docs, output_dir, snapshot, spark, n_buckets)
 

@@ -349,8 +349,9 @@ def streaming_lsh_bands(
     n: int = 4,
 ) -> DataFrame:
     """MinHash banding legal on a streaming DataFrame: a thin delegation
-    to the ONE batch bucket spec (operators/dedup.lsh_bands with
-    spread=False — pure expressions, no repartition) so a bucket claimed
+    to the ONE batch bucket spec (operators/dedup.lsh_bands, whose
+    spread leaves a streaming frame unchanged — pure expressions, no
+    repartition) so a bucket claimed
     by the stream is THE SAME bucket batch LSH / the persisted band
     index (lsh_band_index) would land the document in — streaming
     verdicts, batch candidate pairs, and incremental-index verdicts are
@@ -363,9 +364,9 @@ def streaming_lsh_bands(
         F.col(ts_col).alias("ts"),
         F.col(text_col),
     )
-    return lsh_bands(
-        src, text_col, k, band_size, n, spread=False, keep=("ts",)
-    ).select("band_no", "bucket", "doc_id", "ts")
+    return lsh_bands(src, text_col, k, band_size, n, keep=("ts",)).select(
+        "band_no", "bucket", "doc_id", "ts"
+    )
 
 
 def streaming_lsh_dedup(

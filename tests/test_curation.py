@@ -33,6 +33,20 @@ def _docs(spark):
     )
 
 
+def _cached_rdds(spark, build):
+    """Rows of the frame `build()` returns, the number of persistent RDDs
+    building and collecting it adds, and whether the session owner's
+    clearCache() releases them all."""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    # other tests' localCheckpoints stay registered past clearCache()
+    spark.catalog.clearCache()
+    before = set(persistent().keySet())
+    rows = build().collect()
+    added = set(persistent().keySet()) - before
+    spark.catalog.clearCache()
+    return rows, len(added), set(persistent().keySet()) == before
+
+
 class TestLshTopk:
     def test_recall_vs_brute_force(self, spark):
         """VERDICT r01 #4 acceptance: multi-band sign-LSH top-1 must find the
@@ -296,26 +310,24 @@ class TestScaleGuards:
         assert g == j and all(a < b for a, b in g)
 
     def test_cache_registry_release(self, spark):
-        docs = _docs(spark).limit(50)
-        reg: list = []
-        pairs = D.lsh_candidate_pairs(docs, cache_registry=reg)
-        pairs.count()
-        assert len(reg) == 1
-        assert reg[0].storageLevel.useMemory
-        cached_frame = reg[0]
-        D.release_caches(reg)
-        assert not reg
-        assert not cached_frame.storageLevel.useMemory
+        """LSH pairs cache exactly one frame (the bands), and the session
+        owner's clearCache() releases it."""
+        _, n_cached, released = _cached_rdds(
+            spark, lambda: D.lsh_candidate_pairs(_docs(spark).limit(50))
+        )
+        assert n_cached == 1
+        assert released
 
     def test_capped_jaccard_persists_only_precap(self, spark):
-        reg: list = []
-        pairs = D.near_duplicate_pairs_jaccard(
-            _docs(spark).limit(50), max_df=20, cache_registry=reg
+        _, n_cached, released = _cached_rdds(
+            spark,
+            lambda: D.near_duplicate_pairs_jaccard(
+                _docs(spark).limit(50), max_df=20
+            ),
         )
-        pairs.count()
         # exactly ONE cached frame (the pre-cap shingles), not two
-        assert len(reg) == 1
-        D.release_caches(reg)
+        assert n_cached == 1
+        assert released
 
     def test_drop_duplicates_auto_still_broadcasts_small_drop_set(self, spark):
         """With broadcast='auto' (no forced hint) a small drop set must
@@ -683,14 +695,16 @@ class TestDuplicatePassages:
         return spark.createDataFrame(rows, ["doc_id", "text"])
 
     def test_planted_passages_exact_extents(self, spark):
-        reg: list = []
+        rows, n_cached, released = _cached_rdds(
+            spark, lambda: D.duplicate_passages(self._frame(spark), k=self.K)
+        )
+        # one cached frame (the positional k-grams), released by clearCache
+        assert n_cached == 1
+        assert released
         out = {
             (r["doc_id"]): (r["start_word"], r["end_word"], r["n_words"])
-            for r in D.duplicate_passages(
-                self._frame(spark), k=self.K, registry=reg
-            ).collect()
+            for r in rows
         }
-        D.release_caches(reg)
         # doc 0: shared run occupies words 3..9 (7 words)
         assert out[0] == (3, 9, 7)
         # doc 1: words 1..7

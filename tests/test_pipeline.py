@@ -58,9 +58,9 @@ def test_checkpointed_run_and_resume(spark, tables, corpus_dir, tmp_path):
     # resume: everything already completed -> zero new docs
     m2 = run_extraction_job(spark, corpus_dir, out_dir, n_buckets=8)
     assert m2["n_docs"] == 0
-    # errors appended twice (two runs)
+    # errors overwritten, not appended: one copy after two runs
     errs = spark.read.parquet(f"{out_dir}/errors")
-    assert errs.count() == 2 * tables["documents_spans_bad"].count()
+    assert errs.count() == 1 * tables["documents_spans_bad"].count()
 
 
 def test_checkpointed_run_caches_nothing_and_manifest_recounts(
@@ -88,7 +88,9 @@ def test_checkpointed_run_caches_nothing_and_manifest_recounts(
     assert len(manifest) == m["buckets"] == len(recount) > 1
 
 
-def test_partial_resume_rewrites_only_dropped_buckets(spark, corpus_dir, tmp_path):
+def test_partial_resume_rewrites_only_dropped_buckets(
+    spark, tables, corpus_dir, tmp_path
+):
     """Buckets missing from the manifest are re-run, and only they: their
     partition directories are rewritten, every other bucket's files stay,
     and the data equals the first run's."""
@@ -115,6 +117,9 @@ def test_partial_resume_rewrites_only_dropped_buckets(spark, corpus_dir, tmp_pat
     assert data2 == data1
     rewritten = {b for b in files1 if files2[b] != files1[b]}
     assert rewritten == {f"bucket={b}" for b in dropped}
+    # one copy of the errors after the partial resume
+    errs = spark.read.parquet(str(out / "errors"))
+    assert errs.count() == tables["documents_spans_bad"].count()
 
 
 @contextmanager
@@ -143,7 +148,7 @@ def _counted(spark, group):
 
 def test_run_extraction_job_fixed_cost(spark, corpus_dir, tmp_path):
     """One call's fixed cost stays down: at most 17 Spark jobs (the
-    error-sink append and the stages of the one write) and 3,500 Py4J round
+    error-sink write and the stages of the one write) and 3,500 Py4J round
     trips. Measured on this corpus: 17 jobs and 3,180-3,334 round trips over
     six calls; 26 jobs and ~11k round trips while load_corpus inferred
     schemas with Spark jobs, the Observation was built from per-bucket
@@ -185,7 +190,7 @@ def test_run_extraction_job_rejects_bad_n_buckets(spark, corpus_dir, tmp_path):
     for n in (0, -3):
         with pytest.raises(ValueError, match="n_buckets"):
             run_extraction_job(spark, corpus_dir, str(out_dir), n_buckets=n)
-    assert not out_dir.exists()  # refused before the error-sink append
+    assert not out_dir.exists()  # refused before the error-sink write
 
 
 def test_resume_refuses_a_different_bucket_count(spark, corpus_dir, tmp_path):
@@ -269,6 +274,83 @@ def test_spread_small_scan_null_keys_spread(spark):
     ).select("k", F.spark_partition_id().alias("p"))
     want = {r["k"]: r["p"] for r in plain.collect() if r["k"] is not None}
     assert {r["k"]: r["p"] for r in parts if r["k"] is not None} == want
+
+
+def _lines_frame(spark):
+    return spark.createDataFrame(
+        [(i, f"HEADER\nline {i}\nFOOTER") for i in range(40)],
+        "doc_id long, text string",
+    ).coalesce(1)
+
+
+def test_spread_builds_without_spark_jobs(spark):
+    """Building the spread of a frame holding an exchange (a
+    strip_frequent_lines output) or a cache launches no Spark job: an
+    AdaptiveSparkPlanExec is spread without asking it for its partitions,
+    which would run its query stages."""
+    from index_search_monorepo_spark.operators import dedup as D
+    from index_search_monorepo_spark.operators.skew import (
+        persist,
+        spread_small_scan,
+    )
+
+    stripped = D.strip_frequent_lines(_lines_frame(spark), min_docs=3)
+    persisted = persist(spread_small_scan(_lines_frame(spark)))
+    try:
+        for name, df in (("stripped", stripped), ("persisted", persisted)):
+            with _counted(spark, f"spread_{name}") as n:
+                out = spread_small_scan(df)
+            assert n["jobs"] == 0, name
+            assert out is not df, name
+    finally:
+        spark.catalog.clearCache()
+
+
+def test_dedup_spread_spreads_null_doc_ids(spark):
+    """NULL doc_id rows on a dedup path (with_simhash) land in more than
+    one partition, not all in the partition of xxhash64(NULL)."""
+    from index_search_monorepo_spark.operators import dedup as D
+
+    df = _lines_frame(spark).withColumn(
+        "doc_id",
+        F.when(F.col("doc_id") % 2 == 0, F.col("doc_id")),
+    )
+    parts = D.with_simhash(df).select(
+        "doc_id", F.spark_partition_id().alias("p")
+    ).collect()
+    assert len(parts) == 40
+    assert len({r["p"] for r in parts if r["doc_id"] is None}) > 1
+
+
+def test_doc_fingerprint_persists_only_a_spread_base(spark, tmp_path):
+    """q_doc_fingerprint caches its base only when the spread ran: a
+    single-file documents table is spread and persisted; a table written
+    as >= shuffle.partitions files is not spread, and its plan caches no
+    doc-grain frame (the corpus is not cached whole). The distinct
+    benchmark-shingle set decontaminate caches stays in both."""
+    import __spark_entry__ as entrymod
+
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    docs = spark.createDataFrame(
+        [(i, f"words of document {i}", f"feed{i % 3}") for i in range(40)],
+        "doc_id long, text string, source string",
+    )
+    dirs = {1: tmp_path / "one", 2 * n: tmp_path / "many"}
+    for n_files, d in dirs.items():
+        docs.repartition(n_files).write.parquet(str(d / "documents.parquet"))
+    q = entrymod.queries()["doc_fingerprint"]
+    try:
+        plans = {
+            n_files: q(spark, str(d))._jdf.queryExecution()
+            .optimizedPlan().toString()
+            for n_files, d in dirs.items()
+        }
+    finally:
+        spark.catalog.clearCache()
+    cached_docs = "InMemoryRelation [doc_id#"
+    assert cached_docs in plans[1]
+    assert cached_docs not in plans[2 * n]
+    assert "InMemoryRelation [shingle#" in plans[2 * n]
 
 
 class TestKeySkewReport:
