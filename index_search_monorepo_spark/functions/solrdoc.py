@@ -64,11 +64,3 @@ def create_solr_string_expr(df: DataFrame, columns: list[str] | None = None) -> 
     return F.concat(
         F.lit("<add><doc>"), F.array_join(parts, "\n"), F.lit("</doc></add>")
     )
-
-
-def with_solr_xml(
-    df: DataFrame,
-    columns: list[str] | None = None,
-    out_col: str = "solr_xml",
-) -> DataFrame:
-    return df.withColumn(out_col, create_solr_string_expr(df, columns))

@@ -149,7 +149,7 @@ def strip_leading_zeros_expr(col: Column) -> Column:
 
 def pairtree_sanitize_expr(col: Column) -> Column:
     """F6 — pairtree character sanitize (ht_document.py:63-74 /
-    sources.zip_ingest.pairtree_sanitize, column form): '.'->',',
+    oracle_pairtree_sanitize, column form): '.'->',',
     ':'->'+', '/'->'='."""
     return F.translate(col, "./:", ",=+")
 

@@ -40,7 +40,8 @@ small merge lists.
 
 No reference counterpart (the reference indexes whole OCR text); this is
 the tokenization stage of the training-data-pipeline family (build
-brief), sibling to textstats.with_token_count_bpe's pre-tokenizer.
+brief), sharing textstats.with_token_stats' pre-tokenizer
+(BPE_PRETOKEN_RE).
 """
 
 from __future__ import annotations

@@ -83,10 +83,9 @@ def run_checkpointed(
     input_snapshot_id: str,
     spark: SparkSession,
     n_buckets: int,
-    span_count_col: str = "span_count",
 ) -> dict:
     """Write `df_bucketed` (must carry `bucket` in [0, n_buckets) and a
-    per-row span-count column) partitioned by bucket, then append the
+    per-row `span_count`) partitioned by bucket, then append the
     manifest atomically (tmp-file + rename). Returns run metrics.
 
     Per-bucket n_docs/span_count come from an Observation on the write: two
@@ -101,7 +100,7 @@ def run_checkpointed(
     out.mkdir(parents=True, exist_ok=True)
     buckets = range(n_buckets)
     n_docs = ", ".join(f"count_if(bucket = {i})" for i in buckets)
-    spans = ", ".join(f"sum(if(bucket = {i}, `{span_count_col}`, 0))" for i in buckets)
+    spans = ", ".join(f"sum(if(bucket = {i}, `span_count`, 0))" for i in buckets)
     obs = Observation("checkpoint")
     (
         df_bucketed.observe(

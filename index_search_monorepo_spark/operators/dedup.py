@@ -599,7 +599,10 @@ def duplicate_clusters(
      - `localCheckpoint()` per round: persist alone does NOT truncate
        lineage for PLANNING — the logical plan doubles per round and
        Catalyst analysis time grows exponentially (the classic iterative
-       pitfall; 2 700 edges hung the driver at 22 cores for minutes);
+       pitfall; 2 700 edges hung the driver at 22 cores for minutes).
+       A checkpoint's blocks outlive `spark.catalog.clearCache()`, so each
+       round's is released once the next one is materialized: one call
+       leaves exactly one checkpoint, the one its lazy result reads;
      - convergence via the label SUM, which is strictly monotone
        decreasing until fixpoint — one aggregate job per round, no
        old-vs-new join;
@@ -653,11 +656,14 @@ def duplicate_clusters(
             ),
         )
         gmin = cand.groupBy("label").agg(F.min("cand").alias("gmin"))
-        labels = (
+        prev, labels = labels, (
             cand.join(gmin, "label")
             .select("doc_id", F.least("cand", "gmin").alias("label"))
             .localCheckpoint()
         )
+        # the replaced round's blocks: a persisted RDD under a LogicalRDD,
+        # which no cache call reaches
+        prev._jdf.queryExecution().analyzed().rdd().unpersist(True)
         new_sum = labels.agg(F.sum("label")).collect()[0][0]
         if new_sum == prev_sum:
             break

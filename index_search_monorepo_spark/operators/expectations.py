@@ -30,7 +30,7 @@ Design rules (all load-bearing at scale):
   in DuckDB (``checks_select_sql`` emits the mirror aggregates).
 - **Failures are rows, never job failures** (repo convention): the result
   is a DataFrame with ``ok`` 0/1 per rule; callers gate downstream stages
-  on it (e.g. refuse to publish a snapshot version when any ok=0).
+  on it.
 - **Regex rules** (``pattern``) must stay inside the Java-regex /
   DuckDB-RE2 common subset (same contract as operators/pii.py): no
   backrefs, no lookbehind, character classes and anchors only.
@@ -361,55 +361,3 @@ def checks_select_sql(checks: list[dict]) -> list[str]:
         out.append(f"CAST(CASE WHEN {ok} THEN 1 ELSE 0 END AS BIGINT) AS {rid}_ok")
     return out
 
-
-# ------------------------------------------------------------- streaming --
-
-# rule kinds whose aggregates are commutative/associative WITHOUT distinct
-# state — the subset Structured Streaming can run per window. uniqueness/
-# key_unique compile to count(DISTINCT ...), which streaming aggregation
-# rejects; at ingest time approximate distinct is the HLL sketch's job.
-STREAMING_KINDS = ("completeness", "row_count", "bounds", "in_set", "pattern")
-
-
-def streaming_check_constraints(
-    stream: "DataFrame",
-    checks: list[dict],
-    ts_col: str,
-    window: str = "10 minutes",
-    watermark: str = "10 minutes",
-) -> "DataFrame":
-    """Per-window data-quality metrics over an ingest stream — the same
-    compiled rules as :func:`check_constraints` (column mode), grouped by
-    an event-time tumbling window so a bad FEED WINDOW is visible while
-    the batch is still loading, not after. Only the distinct-free kinds
-    are legal (STREAMING_KINDS); a uniqueness rule here raises
-    immediately rather than failing at stream start. Output: one row per
-    closed window with {rule_id}_obs/_ok columns — append-mode, state
-    bounded by the watermark. Gate batch publication on the batch-side
-    audit (publish_snapshot_audited); this is the early-warning mirror.
-    """
-    checks_n = [_norm_check(c) for c in checks]
-    bad = [c["rule_id"] for c in checks_n if c["kind"] not in STREAMING_KINDS]
-    if bad:
-        raise ValueError(
-            f"rules {bad} use distinct aggregates, which streaming "
-            f"aggregation cannot run — restrict to {STREAMING_KINDS} "
-            "(approximate distinct at ingest = sketches.hll)"
-        )
-    aggs: list[Column] = [F.count(F.lit(1)).cast("long").alias("_total")]
-    for i, c in enumerate(checks_n):
-        aggs.extend(_agg_exprs(i, c))
-    agg = (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("w"))
-        .agg(*aggs)
-    )
-    sel: list[Column] = [
-        F.col("w.start").alias("window_start"),
-        F.col("w.end").alias("window_end"),
-    ]
-    for i, c in enumerate(checks_n):
-        obs, ok = _post_exprs(i, c)
-        sel.append(obs.alias(f"{c['rule_id']}_obs"))
-        sel.append(ok.alias(f"{c['rule_id']}_ok"))
-    return agg.select(*sel)

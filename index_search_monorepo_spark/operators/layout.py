@@ -155,23 +155,3 @@ def file_minmax(path: str, cols: Sequence[str]) -> list[dict]:
         if len(rec) > 1:
             out.append(rec)
     return out
-
-
-def files_touched(
-    ranges: list[dict], box: dict[str, tuple[int, int]]
-) -> int:
-    """How many files a conjunctive box predicate must read: a file is
-    touched when its [min, max] intersects the box on EVERY predicate
-    column (exactly the parquet reader's pruning rule)."""
-    n = 0
-    for rec in ranges:
-        hit = True
-        for c, (lo, hi) in box.items():
-            if c not in rec:
-                continue
-            fmin, fmax = rec[c]
-            if fmax < lo or fmin > hi:
-                hit = False
-                break
-        n += hit
-    return n

@@ -4,13 +4,14 @@ app/data_operations/src/metadata_extractor/metadata_generator.py).
 
 Every predicate/extract is a pure column expression over the
 sources/marc_json.py columnar MARC shape — no pymarc objects, no per-row
-Python. The reference's per-record generator loop
-(generate_dissertation_rows, :203-209) becomes one filtered select.
+Python; the contract's dissertation gate composes them into the
+reference's keyword AND institution filter (generate_dissertation_rows,
+:203-209).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 DEFAULT_KEYWORDS = ("dissertation", "phd", "ph.d.", "doctoral", "degree of doctor")
@@ -85,17 +86,6 @@ def subjects_expr(fields: Column) -> Column:
     return F.filter(F.transform(flat, lambda s: F.trim(s)), lambda s: s != "")
 
 
-def identifiers_expr(fields: Column) -> Column:
-    """extract_identifiers (:114-135): 502$o then 035$a then 035$z,
-    stripped, non-empty."""
-    flat = F.concat(
-        subfield_values(fields, "502", "o"),
-        subfield_values(fields, "035", "a"),
-        subfield_values(fields, "035", "z"),
-    )
-    return F.filter(F.transform(flat, lambda s: F.trim(s)), lambda s: s != "")
-
-
 def pub_year_expr(fields: Column) -> Column:
     """F9 (extract_publication_year, :157-183): first 4-digit year in
     264$c, else 260$c, else ''."""
@@ -131,36 +121,3 @@ def title_expr(fields: Column) -> Column:
     a = _first_subfield(fields, "245", ("a",))
     b = _first_subfield(fields, "245", ("b",))
     return F.trim(F.concat_ws(" ", a, b))
-
-
-def author_expr(fields: Column) -> Column:
-    """pymarc record.author analog: first of 100$a / 110$a / 111$a."""
-    return F.coalesce(
-        _first_subfield(fields, "100", ("a",)),
-        _first_subfield(fields, "110", ("a",)),
-        _first_subfield(fields, "111", ("a",)),
-        F.lit(""),
-    )
-
-
-def dissertation_rows(
-    df: DataFrame,
-    keywords: tuple[str, ...] = DEFAULT_KEYWORDS,
-    institution_id: str = "MIU",
-) -> DataFrame:
-    """generate_dissertation_rows (:203-209) + build_metadata_row (:186-199)
-    as one filtered select: keyword AND institution predicates, then the
-    six-column CSV row shape with '; '-joined lists."""
-    f = F.col("fields")
-    return (
-        df.filter(matches_keywords_expr(f, keywords))
-        .filter(has_institution_expr(f, institution_id))
-        .select(
-            control_number_expr(f).alias("control_number"),
-            title_expr(f).alias("title"),
-            author_expr(f).alias("author"),
-            pub_year_expr(f).alias("year_published"),
-            F.array_join(subjects_expr(f), "; ").alias("discipline"),
-            F.array_join(identifiers_expr(f), "; ").alias("other_sources"),
-        )
-    )

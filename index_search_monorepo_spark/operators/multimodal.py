@@ -1545,10 +1545,6 @@ def extract_media_metadata(df_with_payload: DataFrame) -> DataFrame:
     return df_with_payload.mapInPandas(_decode_batches, MEDIA_META_SCHEMA)
 
 
-def media_metadata(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return extract_media_metadata(with_binary_payload(df, text_col))
-
-
 # ---------------------------------------------------------------------------
 # media transform kernels: resize / frame-sample / feature-extract.
 # Same contract as the decode stub: the Spark-side plumbing (schemas, Arrow

@@ -446,7 +446,7 @@ def stratified_sample_oracle_sql(
 # so every token is covered, chunk i and i+1 share exactly `overlap`
 # tokens (when chunk i is full), and no degenerate tail shorter than
 # overlap+1 is ever emitted. Zero shuffles: with_chunks is a pure map
-# stage; chunk_documents adds one Generate (posexplode).
+# stage.
 # ---------------------------------------------------------------------------
 
 
@@ -514,41 +514,6 @@ def with_chunks(
         )
     )
     return out.drop("_ck_toks", "_ck_n")
-
-
-def chunk_documents(
-    df: DataFrame,
-    text_col: str = "text",
-    size: int = 64,
-    overlap: int = 16,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Chunk-grain view: one row per (doc, chunk_no) with the chunk text
-    and its exact token count (empty docs emit no rows). At 100 TB this
-    IS the output grain — a chunked training/retrieval corpus is written
-    from here; the per-doc aggregate view stays in with_chunks."""
-    stride = _check_chunking(size, overlap)
-    base = with_chunks(df, text_col=text_col, size=size, overlap=overlap)
-    carry = [c for c in df.columns if c not in (text_col,)]
-    return base.select(
-        *carry,
-        F.col("n_chunks"),
-        # extraction.explode_noinline's double-reference guard, posexplode
-        # flavor: keeps the chunk-array expression in the child Project
-        # instead of being inlined (and then duplicated) into Generate
-        F.posexplode(
-            F.when(F.size("chunks") >= 0, F.col("chunks"))
-        ).alias("chunk_no", "chunk_text"),
-    ).withColumn(
-        "chunk_n_tokens",
-        F.when(
-            F.col("chunk_no") < F.col("n_chunks") - 1, F.lit(size)
-        )
-        .otherwise(
-            F.size(F.filter(F.split("chunk_text", " "), lambda t: t != ""))
-        )
-        .cast("long"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -665,20 +630,6 @@ def pack_bins_ffd(
             "doc_id long, n_tokens long, shard long,"
             " bin_id long, bin_oversize boolean"
         ),
-    )
-
-
-def bin_stats(packed: DataFrame, size: int) -> DataFrame:
-    """Per-bin rollup of a pack_bins_ffd assignment: (shard, bin_id,
-    n_docs, fill, waste) — the padding-efficiency evidence (sum(waste)
-    over sum of bin capacity is the padding fraction a trainer pays)."""
-    return packed.groupBy("shard", "bin_id").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("fill"),
-        F.greatest(
-            F.lit(0).cast("long"),
-            (F.lit(size) - F.sum("n_tokens")).cast("long"),
-        ).alias("waste"),
     )
 
 

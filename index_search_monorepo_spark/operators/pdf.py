@@ -28,10 +28,12 @@ pipeline consumes):
    by x within a line — so out-of-order content streams (two-column or
    z-ordered emitters) still yield the human reading sequence.
 
-Errors are rows: malformed payloads produce `ok=false` metadata rows and
-zero spans, never task failures. Spark surface is the multimodal kernel
-shape — `mapInPandas` straight over the scan, no shuffle, payloads read
-exactly once.
+`parse_pdf` is the per-document parse. The Spark surface is one fused
+kernel, `pdf_profile` (structural metadata plus the layout-ordered text),
+in the multimodal kernel shape — `mapInPandas` straight over the scan, no
+shuffle, payloads read exactly once. Errors are rows: a malformed payload
+is an `ok=false` row with empty text, never a task failure. `build_pdf`
+writes the conformant PDFs the tests parse.
 """
 
 from __future__ import annotations
@@ -493,145 +495,13 @@ def parse_pdf(payload: bytes) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# Spark kernels (multimodal.py shape: mapInPandas over the scan, no shuffle)
+# Spark kernel (multimodal.py shape: mapInPandas over the scan, no shuffle)
 # ---------------------------------------------------------------------------
 
-PDF_META_SCHEMA = (
+PDF_PROFILE_SCHEMA = (
     "doc_id long, n_bytes long, ok boolean, pdf_version string, "
-    "n_pages long, n_text_spans long, n_media_spans long"
+    "n_pages long, n_text_spans long, n_media_spans long, doc_text string"
 )
-PDF_SPANS_SCHEMA = (
-    "doc_id long, page_no long, offset long, kind string, text string, "
-    "media_ref string"
-)
-PDF_TEXT_SCHEMA = "doc_id long, page_no long, page_text string"
-
-
-def pdf_metadata(df_with_payload: DataFrame) -> DataFrame:
-    """binary payload -> PDF structural metadata. Malformed payloads are
-    ok=false rows (errors are rows, never job failures)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_b in batches:
-            rows = []
-            for doc_id, payload in zip(pdf_b["doc_id"], pdf_b["payload"]):
-                p = bytes(payload) if payload is not None else b""
-                d = parse_pdf(p)
-                spans = [s for pg in d["pages"] for s in pg["spans"]]
-                rows.append(
-                    (
-                        doc_id,
-                        len(p),
-                        d["ok"],
-                        d["version"],
-                        d["n_pages"],
-                        sum(1 for s in spans if s["kind"] == "txt"),
-                        sum(1 for s in spans if s["kind"] == "media"),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_bytes", "ok", "pdf_version", "n_pages",
-                    "n_text_spans", "n_media_spans",
-                ],
-            )
-
-    return df_with_payload.mapInPandas(fn, PDF_META_SCHEMA)
-
-
-def extract_pdf_spans(df_with_payload: DataFrame) -> DataFrame:
-    """binary payload -> interleaved span rows (kind/text/media_ref/order),
-    the north-rule data model: text shows and image Do ops in content
-    order, offset restarting per page. Unparseable payloads yield zero
-    spans (pair with pdf_metadata's ok flag for the error surface)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_b in batches:
-            rows = []
-            for doc_id, payload in zip(pdf_b["doc_id"], pdf_b["payload"]):
-                p = bytes(payload) if payload is not None else b""
-                for pg in parse_pdf(p)["pages"]:
-                    for off, s in enumerate(pg["spans"], start=1):
-                        rows.append(
-                            (
-                                doc_id, pg["page_no"], off, s["kind"],
-                                s["text"], s["media_ref"],
-                            )
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "page_no", "offset", "kind", "text",
-                    "media_ref",
-                ],
-            )
-
-    return df_with_payload.mapInPandas(fn, PDF_SPANS_SCHEMA)
-
-
-def extract_pdf_text(df_with_payload: DataFrame) -> DataFrame:
-    """binary payload -> per-page LAYOUT-ORDERED text (y-clustered lines,
-    x-sorted runs — reading order even when the content stream emits
-    out of order)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_b in batches:
-            rows = []
-            for doc_id, payload in zip(pdf_b["doc_id"], pdf_b["payload"]):
-                p = bytes(payload) if payload is not None else b""
-                for pg in parse_pdf(p)["pages"]:
-                    rows.append((doc_id, pg["page_no"], pg["text"]))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "page_no", "page_text"]
-            )
-
-    return df_with_payload.mapInPandas(fn, PDF_TEXT_SCHEMA)
-
-
-PDF_DOCUMENTS_SCHEMA = (
-    "doc_id string, spans array<struct<kind:string,text:string,"
-    "media_ref:string,offset:int>>"
-)
-
-
-def pdf_documents(df_with_payload: DataFrame) -> DataFrame:
-    """binary PDF payloads -> the engine's input contract
-    `(doc_id:string, spans:array<struct<kind,text,media_ref,offset>>)`
-    (BASELINE.json input_hint) — PDFs become a first-class SOURCE for
-    the extraction pipeline, interchangeable with zip/METS ingest.
-
-    Spans are assembled inside the kernel (offset = 1-based global
-    content order across pages, text spans carry their page's reading-
-    order-independent show text, image Do ops become media spans with
-    media_ref 'img:<objnum>'), so the reshape is scan -> mapInPandas
-    with NO groupBy/shuffle. Unparseable payloads yield an empty spans
-    array (pair with pdf_metadata for the error surface)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_b in batches:
-            rows = []
-            for doc_id, payload in zip(pdf_b["doc_id"], pdf_b["payload"]):
-                p = bytes(payload) if payload is not None else b""
-                spans, off = [], 0
-                for pg in parse_pdf(p)["pages"]:
-                    for s in pg["spans"]:
-                        off += 1
-                        spans.append(
-                            {
-                                "kind": s["kind"],
-                                "text": s["text"],
-                                "media_ref": s["media_ref"],
-                                "offset": off,
-                            }
-                        )
-                rows.append((str(doc_id), spans))
-            yield pd.DataFrame(rows, columns=["doc_id", "spans"])
-
-    return df_with_payload.mapInPandas(fn, PDF_DOCUMENTS_SCHEMA)
-
-
-PDF_PROFILE_SCHEMA = PDF_META_SCHEMA + ", doc_text string"
 
 
 def pdf_profile(df_with_payload: DataFrame) -> DataFrame:

@@ -4,9 +4,7 @@ compression half of the FAISS IVF-PQ shape whose coarse half
 vectors the embeddings themselves are the storage and bandwidth cost
 (64 floats = 256 B/vec); PQ splits the dimension into m subspaces,
 k-means-quantizes each independently, and stores ONE CODE PER SUBSPACE
-(m small ints — 64× smaller at m=4, k<=256), while queries score
-against codes asymmetrically (ADC: the query stays full-precision, so
-accuracy degrades gracefully).
+(m small ints — 64× smaller at m=4, k<=256).
 
 L2 is the metric here (and in the paper) because squared euclidean
 DECOMPOSES BY SUBSPACE: ||x−q||² = Σ_j ||x_j − q_j||², which is what
@@ -26,8 +24,6 @@ Plan shapes (the 100 TB contract):
     per partition, never vectors. Codebooks collect per iteration
     (m·k·d_sub doubles, bounded tiny) and re-enter as literals —
     Spark ML's driver-loop lineage truncation.
-  * ADC top-k — codes × broadcast(queries) × broadcast(model), pure
-    projection arithmetic, per-query TakeOrdered via window rank.
 
 Determinism contract: centroid coordinates are 6 dp-rounded
 (kmeans_iterate convention) and distances are 6 dp-rounded before the
@@ -43,7 +39,7 @@ per the brief's similarity-search category.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -234,102 +230,6 @@ def pq_train(
         books = new_books
         model = pq_book_literal(spark, books)
     return model
-
-
-def pq_reconstruction_error(
-    codes: DataFrame,
-    emb: DataFrame,
-    model: DataFrame,
-    m: int,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> float:
-    """Mean squared quantization error — the metric Lloyd iterations
-    must not increase (test evidence that training trains)."""
-    _check(dim, m)
-    d_sub = dim // m
-    joined = codes.join(
-        emb.select(
-            F.col(id_col).alias("vid"),
-            _as_double(F.col(vec_col)).alias("_v"),
-        ),
-        "vid",
-    ).join(F.broadcast(model))
-    d2 = F.aggregate(
-        F.sequence(F.lit(1), F.lit(m)),
-        F.lit(0.0),
-        lambda acc, j: acc
-        + _sqdist(
-            F.slice(F.col("_v"), (j - 1) * d_sub + 1, d_sub),
-            F.element_at(
-                F.element_at(F.col("books"), j),
-                (F.element_at(F.col("codes"), j) + 1).cast("int"),
-            ),
-        ),
-    )
-    return joined.agg(F.avg(d2)).collect()[0][0]
-
-
-def pq_adc_topk(
-    codes: DataFrame,
-    emb: DataFrame,
-    model: DataFrame,
-    query_ids: list[int],
-    k: int,
-    m: int,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = True,
-) -> DataFrame:
-    """(qid, vid, adc_d2_e6, rank) — asymmetric-distance top-k: the
-    full-precision query scores against CODES only. Codes × broadcast
-    queries × broadcast model, pure projection, then a per-query window
-    rank under the (d2, vid) total order. adc_d2_e6 is the 6 dp
-    distance in e6 fixed point (BIGINT) so downstream comparisons are
-    integer-exact."""
-    _check(dim, m)
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if not query_ids:
-        raise ValueError("need at least one query id")
-    d_sub = dim // m
-    queries = emb.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("qid"),
-        _as_double(F.col(vec_col)).alias("_q"),
-    )
-    d2 = F.aggregate(
-        F.sequence(F.lit(1), F.lit(m)),
-        F.lit(0.0),
-        lambda acc, j: acc
-        + _sqdist(
-            F.slice(F.col("_q"), (j - 1) * d_sub + 1, d_sub),
-            F.element_at(
-                F.element_at(F.col("books"), j),
-                (F.element_at(F.col("codes"), j) + 1).cast("int"),
-            ),
-        ),
-    )
-    scored = (
-        codes.join(F.broadcast(model))
-        .join(F.broadcast(queries))
-        .select(
-            "qid",
-            "vid",
-            F.round(d2 * 1e6).cast("long").alias("adc_d2_e6"),
-        )
-    )
-    if exclude_self:
-        scored = scored.filter(F.col("qid") != F.col("vid"))
-    w = Window.partitionBy("qid").orderBy(
-        F.asc("adc_d2_e6"), F.asc("vid")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .withColumn("rank", F.col("rank").cast("long"))
-    )
 
 
 def pq_codes_oracle_ctes(

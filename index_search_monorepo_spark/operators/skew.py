@@ -6,10 +6,10 @@ The reference has none (one doc = one queue message regardless of page count;
 SURVEY.md §4 O13); AQE's skew-join splitting cannot split a single fat row of
 UDF work, so we place rows deliberately:
 
- - `salted_repartition` spreads docs uniformly by xxhash64(doc_id, salt_round)
-   so co-occurring fat rows do not pile into one partition; the partition
-   count comes from scan file metadata (or an explicit parameter) — never
-   from a driver-side pre-scan job.
+ - `salted_repartition` spreads docs uniformly by xxhash64(doc_id, 0) so
+   co-occurring fat rows do not pile into one partition; the partition
+   count comes from scan file metadata — never from a driver-side pre-scan
+   job.
  - `spread_small_scan` is the one spread before compute-heavy narrow work.
  - `persist` is the one cache call: every operator that pins a shared
    frame goes through it. Cached frames live until the session owner's
@@ -29,6 +29,9 @@ from pyspark.sql import functions as F
 # typically 2-4x the on-disk bytes, so 64 MB on disk keeps a partition of
 # span text comfortably inside an executor-core's working memory.
 TARGET_BYTES_PER_PARTITION = 64 << 20
+# salted_repartition's partition-count clamp
+MIN_PARTITIONS = 8
+MAX_PARTITIONS = 100_000
 _STAT_SAMPLE_FILES = 64
 
 
@@ -116,22 +119,17 @@ def spread_small_scan(df: DataFrame, key: str | None = "doc_id") -> DataFrame:
 
 def salted_repartition(
     df: DataFrame,
-    num_partitions: int | None = None,
-    target_bytes_per_partition: int = TARGET_BYTES_PER_PARTITION,
-    min_partitions: int = 8,
-    max_partitions: int = 100_000,
-    salt: int = 0,
     skip_if_scan_parallel: bool = False,
 ) -> DataFrame:
     """Repartition by a salted hash of doc_id so co-occurring fat rows spread
     uniformly across partitions.
 
-    Partition count, in priority order: the explicit `num_partitions`
-    parameter; else input file bytes / target_bytes_per_partition (file
+    Partition count: input file bytes / TARGET_BYTES_PER_PARTITION (file
     METADATA only — the previous design ran a sum(size(spans)) pre-pass,
     i.e. a full extra scan before the real job; at 100 TB that is a
-    100 TB-wide job spent on a partition count); else
-    spark.sql.shuffle.partitions.
+    100 TB-wide job spent on a partition count), else
+    spark.sql.shuffle.partitions; clamped to [MIN_PARTITIONS,
+    MAX_PARTITIONS].
 
     With skip_if_scan_parallel=True the shuffle is elided when the source
     already provides at least spark.sql.shuffle.partitions splits: shuffling
@@ -147,17 +145,13 @@ def salted_repartition(
     if skip_if_scan_parallel:
         if df.rdd.getNumPartitions() >= default_parts:
             return df
-    if num_partitions is not None:
-        n_parts = num_partitions
+    total_bytes = _estimated_input_bytes(df)
+    if total_bytes is None:
+        n_parts = default_parts
     else:
-        total_bytes = _estimated_input_bytes(df)
-        if total_bytes is None:
-            n_parts = default_parts
-        else:
-            n_parts = int(total_bytes / max(target_bytes_per_partition, 1)) + 1
-    n_parts = max(min_partitions, min(max_partitions, n_parts))
-    key = F.xxhash64(F.col("doc_id"), F.lit(salt))
-    return df.repartition(n_parts, key)
+        n_parts = total_bytes // TARGET_BYTES_PER_PARTITION + 1
+    n_parts = max(MIN_PARTITIONS, min(MAX_PARTITIONS, n_parts))
+    return df.repartition(n_parts, F.xxhash64(F.col("doc_id"), F.lit(0)))
 
 
 def key_skew_report(

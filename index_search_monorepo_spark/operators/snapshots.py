@@ -92,25 +92,6 @@ def load_manifest(table_dir: str | Path, version: int | None = None) -> dict:
     return json.loads(path.read_text())
 
 
-def table_history(table_dir: str | Path) -> list[dict]:
-    """One row per snapshot: version, n_files, n_rows, carry/rewrite stats."""
-    mdir = _manifest_dir(table_dir)
-    out = []
-    for p in sorted(mdir.glob("v-*.json")):
-        m = json.loads(p.read_text())
-        out.append(
-            {
-                "version": m["version"],
-                "n_files": len(m["files"]),
-                "n_rows": sum(f["n_rows"] for f in m["files"]),
-                "n_carried": m.get("n_carried", 0),
-                "n_new_files": m.get("n_new_files", len(m["files"])),
-                "parent": m.get("parent"),
-            }
-        )
-    return out
-
-
 def _commit(
     table_dir: str | Path,
     version: int,
@@ -257,14 +238,6 @@ def read_snapshot(
         lo, hi = key_between
         df = df.filter(F.col(m["key_col"]).between(F.lit(lo), F.lit(hi)))
     return df
-
-
-def pruned_file_count(
-    table_dir: str | Path, key_between: tuple, version: int | None = None
-) -> tuple[int, int]:
-    """(files read, files total) for a probe — the pruning evidence."""
-    m = load_manifest(table_dir, version)
-    return len(_prune_files(m["files"], key_between)), len(m["files"])
 
 
 def merge_upsert(

@@ -77,50 +77,15 @@ def with_token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
 BPE_PRETOKEN_RE = r"'(?:s|t|re|ve|m|ll|d)| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+"
 
 
-def with_token_count_bpe(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """BPE-ish token statistics: GPT-2-style regex pre-tokenization (the
-    stage before byte-pair merges) plus a ~4-chars-per-subword estimate.
-    Complements the whitespace counter (`with_token_count`) for
-    training-data budgeting, where whitespace counts undercount CJK /
-    punctuation-heavy text.
-
-    Pure column expressions (one regexp pass per row, bound once behind a
-    Project boundary — CLAUDE.md lesson #1; zero Python, zero shuffle)."""
-    pt = F.regexp_extract_all(F.col(text_col), F.lit(BPE_PRETOKEN_RE), 0)
-    nws = F.filter(F.col("_pt"), lambda t: ~t.rlike(r"^\s+$"))
-    return (
-        df.withColumn("_pt", pt)
-        .withColumn("_nws", nws)
-        .select(
-            "doc_id",
-            F.size("_nws").cast("long").alias("n_bpe_tokens"),
-            F.size(F.filter("_nws", lambda t: t.rlike(r"^ ?\p{L}")))
-            .cast("long")
-            .alias("n_word_tokens"),
-            F.size(F.filter("_nws", lambda t: t.rlike(r"^ ?\p{N}")))
-            .cast("long")
-            .alias("n_numeric_tokens"),
-            F.aggregate(
-                "_nws",
-                F.lit(0).cast("long"),
-                lambda acc, t: acc
-                + F.floor((F.length(F.btrim(t)) + 3) / 4).cast("long"),
-            ).alias("subword_est"),
-        )
-    )
-
-
 def with_token_stats(
     df: DataFrame, text_col: str = "text", keep: tuple[str, ...] = ()
 ) -> DataFrame:
     """C11 combined: whitespace token counts AND BPE-style pre-tokenizer
     counts in one projection — one tokenize pass + one regexp pass per row,
-    each bound once behind a Project boundary (CLAUDE.md lesson #1). The
-    single-family variants (`with_token_count`, `with_token_count_bpe`)
-    remain for callers that need only one side; this is the contract-gated
-    shape covering both. `keep` carries input columns through unchanged
-    (plain refs, free) so composed per-row surfaces avoid a doc_id
-    self-join."""
+    each bound once behind a Project boundary (CLAUDE.md lesson #1); the
+    contract-gated shape covering both families. `keep` carries input
+    columns through unchanged (plain refs, free) so composed per-row
+    surfaces avoid a doc_id self-join."""
     _check_keep(keep, (
         "doc_id", "n_tokens", "n_chars", "n_unique_tokens", "n_bpe_tokens",
         "n_word_tokens", "n_numeric_tokens", "subword_est",
@@ -272,32 +237,6 @@ def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
         "n_short_tokens",
         score.alias("diversity_pmille"),
         band.alias("quality_band"),
-    )
-
-
-def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """n-gram/stopword language heuristic: per-mille of tokens that are
-    English marker words; classify 'en-like' vs 'other'. Single tokenize
-    pass per row (same `_toks` binding as with_quality_score)."""
-    markers = F.array(*[F.lit(m) for m in EN_MARKERS])
-    counted = df.withColumn("_toks", tokens_expr(F.col(text_col))).select(
-        "doc_id",
-        F.size(F.filter("_toks", lambda t: F.array_contains(markers, t)))
-        .cast("long")
-        .alias("marker_hits"),
-        F.size("_toks").cast("long").alias("n_tokens"),
-    )
-    # integer division (DIV) for exact parity with the SQL oracle
-    pmille = F.expr("CAST(1000 * marker_hits DIV n_tokens AS BIGINT)")
-    lang = F.when(pmille >= LANG_THRESHOLD_PMILLE, F.lit("en-like")).otherwise(
-        F.lit("other")
-    )
-    return counted.select(
-        "doc_id",
-        "marker_hits",
-        "n_tokens",
-        pmille.alias("marker_pmille"),
-        lang.alias("lang_guess"),
     )
 
 
@@ -538,52 +477,6 @@ def with_fingerprint(
         F.array_min(shingles).alias("fingerprint"),
         n_sh.cast("long").alias("n_shingles"),
         *keep,
-    )
-
-
-def corpus_mixture_report(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Training-mixture accounting: per (ngram_guess language, quality
-    band) document counts, token/char mass, and per-mille shares of the
-    corpus token total — the report a pipeline reads to set mixture
-    weights before sampling (packing.hash_sample_pmille) and export
-    (packing.pack_sequences).
-
-    One corpus scan, composed via the keep= passthroughs (zero self-
-    joins): with_quality carries the raw text through to with_lang_id_full
-    (whose n_tokens — same tokenizer — serves both). The heavy reduction
-    is the (language x band) hash aggregate — partial map-side combine,
-    one shuffle of ~|langs x bands| rows per partition; the share
-    window runs on the aggregated frame (tens of rows at any corpus
-    size). Integer-exact per-mille (1000*x DIV total)."""
-    q = with_quality(df, text_col, keep=(text_col,))
-    lq = with_lang_id_full(q, text_col, keep=("quality_band", "n_chars"))
-    agg = lq.groupBy("ngram_guess", "quality_band").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("total_tokens"),
-        F.sum("n_chars").cast("long").alias("total_chars"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(F.lit(1))
-    tot = agg.select(
-        "*",
-        F.sum("total_tokens").over(w).alias("corpus_tokens"),
-        F.sum("n_docs").over(w).alias("corpus_docs"),
-    )
-    return tot.select(
-        "ngram_guess",
-        "quality_band",
-        "n_docs",
-        "total_tokens",
-        "total_chars",
-        F.expr(
-            "CAST(CASE WHEN corpus_tokens = 0 THEN 0"
-            " ELSE 1000 * total_tokens DIV corpus_tokens END AS BIGINT)"
-        ).alias("token_share_pmille"),
-        F.expr(
-            "CAST(CASE WHEN corpus_docs = 0 THEN 0"
-            " ELSE 1000 * n_docs DIV corpus_docs END AS BIGINT)"
-        ).alias("doc_share_pmille"),
     )
 
 

@@ -14,10 +14,8 @@ that stage a Spark-first shape:
    "www.example.com" but never "notexample.com") via a bounded per-row
    suffix array (a host has only as many suffixes as labels);
  - a static blocklist (Python list) compiles to a LITERAL array membership
-   test — zero joins, the filter rides the scan;
- - a blocklist relation (DataFrame) goes through suffix-explode ->
-   semi-join (broadcast under AQE when small) -> doc-level anti-join, the
-   unbounded path when the blocklist is itself a table.
+   test (`with_url_features(blocked=...)`'s flag) — zero joins, the flag
+   rides the scan.
 
 No counterpart in /root/reference (it indexes a closed library corpus);
 part of the training-data curation set the build brief makes first-class.
@@ -27,8 +25,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from index_search_monorepo_spark.operators.dedup import _maybe_broadcast
 
 # Host part of an absolute URL: scheme '://', optional userinfo, then
 # everything up to ':' (port), '/', '?' or '#'. Java-regex/RE2 common
@@ -120,46 +116,6 @@ def with_url_features(
             F.arrays_overlap(domain_suffixes_expr(h), lits),
         )
     return out
-
-
-def filter_blocked_domains(
-    df: DataFrame,
-    blocked: list[str] | DataFrame,
-    url_col: str = "url",
-    broadcast: bool | str = "auto",
-) -> DataFrame:
-    """Drop documents whose URL host matches the blocklist at any label
-    suffix.
-
-    Static list -> pure-expression filter (zero joins; the planner pushes
-    it toward the scan). DataFrame (one `domain` column) -> suffix-explode
-    the corpus hosts, semi-join against the blocklist on the domain key
-    (AQE broadcasts a small blocklist under 'auto'; a tabular multi-million-
-    domain list falls back to a shuffle hash join on the uniform domain
-    key), then anti-join the matched doc_ids — the corpus rows themselves
-    never shuffle. Requires unique `doc_id` rows for the DataFrame path.
-    """
-    if isinstance(blocked, DataFrame):
-        sfx = df.select(
-            "doc_id",
-            F.explode(
-                domain_suffixes_expr(host_expr(F.col(url_col)))
-            ).alias("domain"),
-        )
-        bl = blocked.select(F.lower(F.col("domain")).alias("domain"))
-        bad = (
-            sfx.join(_maybe_broadcast(bl, broadcast), "domain", "semi")
-            .select("doc_id")
-            .distinct()
-        )
-        return df.join(bad, "doc_id", "left_anti")
-    tagged = with_url_features(
-        df, url_col=url_col, blocked=list(blocked), prefix="_ufb_"
-    )
-    return tagged.filter(~F.col("_ufb_blocked")).drop(
-        "_ufb_host", "_ufb_registered_domain", "_ufb_tld", "_ufb_is_ip",
-        "_ufb_blocked",
-    )
 
 
 def oracle_url_sql(url_sql: str, blocked: list[str] | None = None) -> dict:

@@ -13,6 +13,7 @@ from __future__ import annotations
 import io
 import json
 import xml.sax.saxutils
+from pathlib import PurePosixPath
 from typing import Any
 
 
@@ -189,3 +190,28 @@ def oracle_item_metadata(record: dict[str, Any], ht_id: str) -> dict[str, Any]:
     out["htsource"] = srcs[pos] if pos < len(srcs) else srcs[0]
     out["vol_id"] = ht_id
     return out
+
+
+def oracle_pairtree_sanitize(obj_id: str) -> str:
+    """Mirror of ht_document.py:34 (F6): '.'->',', ':'->'+', '/'->'='."""
+    return obj_id.translate(str.maketrans({".": ",", ":": "+", "/": "="}))
+
+
+def oracle_pairtree_path(obj_id: str) -> str:
+    """Mirror of ht_document.py:63-74: the 2-char pairtree shard path of
+    the sanitized object id; golden: '39015051333915' ->
+    '/39/01/50/51/33/39/15/39015051333915'."""
+    s = oracle_pairtree_sanitize(obj_id)
+    shards = [s[i : i + 2] for i in range(0, len(s), 2)]
+    return "/" + "/".join(shards) + "/" + s
+
+
+def oracle_doc_id_from_zip_path(path: str, namespace: str | None = None) -> str:
+    """Zip file stem -> ht_id. The stem is the pairtree-sanitized object id
+    (ht_document.py:34); reverse it and prepend the namespace (ht_id =
+    namespace '.' object_id, mysql_data_extractor.py:26-38)."""
+    stem = PurePosixPath(path.split("file:")[-1]).name
+    if stem.endswith(".zip"):
+        stem = stem[:-4]
+    obj_id = stem.translate(str.maketrans({",": ".", "+": ":", "=": "/"}))
+    return f"{namespace}.{obj_id}" if namespace else obj_id

@@ -91,9 +91,7 @@ def load_corpus(spark: SparkSession, corpus_dir: str) -> dict[str, DataFrame]:
 def extract_documents(
     spark: SparkSession,
     tables: dict[str, DataFrame],
-    include_poison: bool = True,
     page_threshold: int = 10_000,
-    repartition: bool = True,
     doc_meta_join: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     # doc_meta_join: join strategy hint ("shuffle_hash" | "merge" | None)
@@ -112,11 +110,10 @@ def extract_documents(
     # (pathological 10^5-page volumes), so the default is deliberately high.
     """Full §1.3 document assembly. Returns (documents, errors)."""
     spans = tables["documents_spans"]
-    if include_poison and "documents_spans_bad" in tables:
+    if "documents_spans_bad" in tables:
         spans = spans.unionByName(tables["documents_spans_bad"])
     clean, errors = split_errors(spans)
-    if repartition:
-        clean = salted_repartition(clean, skip_if_scan_parallel=True)
+    clean = salted_repartition(clean, skip_if_scan_parallel=True)
     docs = with_ocr_skew_aware(clean, page_threshold=page_threshold)
     docs = docs.withColumn("span_count", F.size("spans")).drop("spans")
     docs = with_mysql_fields(
@@ -220,76 +217,3 @@ def publish_snapshot(
     return SNAP.merge_upsert(
         spark, table_dir, docs, delete_keys=deleted_ids, n_files=n_files
     )
-
-
-def publish_snapshot_audited(
-    spark: SparkSession,
-    docs: DataFrame,
-    table_dir: str,
-    checks: list[dict],
-    key_col: str = "id",
-    n_files: int = 8,
-    deleted_ids: DataFrame | None = None,
-    allow_failed: bool = False,
-) -> dict:
-    """Write-Audit-Publish: run declarative data-quality expectations
-    (operators/expectations.py) over the batch BEFORE it becomes a
-    readable snapshot version — the Iceberg WAP pattern composed from
-    this repo's own pieces.
-
-    The audit is one aggregation pass at rule grain (bounded collect:
-    #rules rows). Every outcome is recorded: the JSON report lands in
-    `<table_dir>/audits/` whether or not the publish proceeds. Record-
-    grain failures stay rows (errors-envelope convention upstream); a
-    failed CORPUS-level contract is the one place refusal is correct —
-    a batch violating its declared contract must not become a version
-    downstream consumers can read. The refusal is a returned status
-    (`published: False`, no exception): callers decide whether to alert,
-    retry, or re-publish with `allow_failed=True` (which publishes AND
-    keeps the failed audit on record — the override is auditable).
-
-    Scale: the audit pass is map-side partial aggregation over the batch
-    (not the table); publish stays O(changed files) via merge_upsert.
-    """
-    import json
-    from index_search_monorepo_spark.operators import expectations as EXP
-    from index_search_monorepo_spark.operators import snapshots as SNAP
-
-    report_rows = EXP.check_constraints(docs, checks).collect()
-    rules = [r.asDict() for r in report_rows]
-    failed = sorted(r["rule_id"] for r in rules if r["ok"] == 0)
-    audit = {"rules": rules, "failed": failed, "overridden": False}
-    audit_dir = Path(table_dir) / "audits"
-    audit_dir.mkdir(parents=True, exist_ok=True)
-
-    def _record(name: str) -> str:
-        p = audit_dir / name
-        tmp = p.with_suffix(".tmp")
-        tmp.write_text(json.dumps(audit, indent=1, sort_keys=True))
-        tmp.rename(p)
-        return str(p)
-
-    if failed and not allow_failed:
-        prev = SNAP.current_version(table_dir)
-        n = len(list(audit_dir.glob("refused-*.json")))
-        path = _record(f"refused-{n + 1:04d}.json")
-        return {
-            "published": False,
-            "version": prev,
-            "failed": failed,
-            "audit_path": path,
-        }
-    audit["overridden"] = bool(failed)
-    result = publish_snapshot(
-        spark, docs, table_dir, key_col=key_col, n_files=n_files,
-        deleted_ids=deleted_ids,
-    )
-    version = result.get("version", SNAP.current_version(table_dir))
-    path = _record(f"v{version:06d}.json")
-    return {
-        "published": True,
-        "version": version,
-        "failed": failed,
-        "audit_path": path,
-        **{k: v for k, v in result.items() if k not in ("version", "files")},
-    }

@@ -206,24 +206,20 @@ def export_all(
 # Solr's default similarity since 6.0 is BM25 (the reference's edismax
 # boosts, config_query.yaml, combine ON TOP of the field similarity) — the
 # dismax plan above reproduced the boost algebra; this adds the similarity
-# itself. Two variants:
-#
-#  - with_bm25_score       : true Lucene BM25 (ln idf) in doubles — the
-#    library scoring path (pytest-pinned against a pure-Python reference).
-#  - with_bm25_score_e6    : the ORACLE-EXACT variant per the repo's
-#    integer-arithmetic convention (CLAUDE.md: cents/e4 sums, DIV,
-#    round-before-rank). ln is not IEEE-correctly-rounded, so a float idf
-#    can drift between engines at a rounding boundary; instead idf uses the
-#    same bit-length log2 surrogate as operators/lm.py's NLL
-#    (bitlen((2N+1) DIV (2 df+1)) = floor(log2((N+.5)/(df+.5))) + 1) and the
-#    tf part is an exact rational in e3/e6 fixed point:
-#        avgdl_e3   = (1000 T) DIV N
-#        den_e3     = 1000 tf + 300 + (900000 dl) DIV avgdl_e3
-#                     (k1=1.2, b=0.75: k1(1-b)=0.3, k1 b=0.9, k1+1=2.2)
-#        tfpart_e6  = (2_200_000_000 tf) DIV den_e3
-#        score_e6   = sum_t idf_sur(t) * tfpart_e6(t)
-#    Every intermediate fits a BIGINT for ANY corpus size (no T in a
-#    numerator: max term is 2.2e9 * tf).
+# itself as with_bm25_score_e6, the ORACLE-EXACT form of Lucene BM25 per
+# the repo's integer-arithmetic convention (CLAUDE.md: cents/e4 sums, DIV,
+# round-before-rank). ln is not IEEE-correctly-rounded, so a float idf
+# can drift between engines at a rounding boundary; instead idf uses the
+# same bit-length log2 surrogate as operators/lm.py's NLL
+# (bitlen((2N+1) DIV (2 df+1)) = floor(log2((N+.5)/(df+.5))) + 1) and the
+# tf part is an exact rational in e3/e6 fixed point:
+#     avgdl_e3   = (1000 T) DIV N
+#     den_e3     = 1000 tf + 300 + (900000 dl) DIV avgdl_e3
+#                  (k1=1.2, b=0.75: k1(1-b)=0.3, k1 b=0.9, k1+1=2.2)
+#     tfpart_e6  = (2_200_000_000 tf) DIV den_e3
+#     score_e6   = sum_t idf_sur(t) * tfpart_e6(t)
+# Every intermediate fits a BIGINT for ANY corpus size (no T in a
+# numerator: max term is 2.2e9 * tf).
 #
 # Scale shape: corpus stats (N, T, df per query term) are ONE map-side-
 # combined aggregation producing ONE row, broadcast back over the corpus;
@@ -304,45 +300,6 @@ def with_bm25_score_e6(
         score = score + idf_sur * tfpart
     keep = [c for c in df.columns]
     return bound.select(*keep, score.alias("bm25_e6"))
-
-
-def with_bm25_score(
-    df: DataFrame,
-    terms: list[str],
-    text_col: str = "text",
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """df + bm25 (DOUBLE): true Lucene BM25 —
-    idf = ln(1 + (N - df + 0.5)/(df + 0.5)), tf saturation with length
-    normalization. Same one-aggregation + broadcast plan; library scoring
-    path (cross-engine float ln is not oracle-stable; use
-    with_bm25_score_e6 for driver-gated values)."""
-    stats = _bm25_stats(df, terms, text_col)
-    toks = _field_tokens(df, text_col)
-    bound = (
-        df.join(F.broadcast(stats))
-        .withColumn("_toks", toks)
-        .withColumn("_dl", F.size(F.col("_toks")).cast("double"))
-        .withColumn("_avgdl", F.col("_T").cast("double") / F.col("_N"))
-    )
-    score = F.lit(0.0)
-    for i, trm in enumerate(terms):
-        tf = F.size(
-            F.filter(F.col("_toks"), _term_eq(trm))
-        ).cast("double")
-        idf = F.log(
-            F.lit(1.0)
-            + (F.col("_N") - F.col(f"_df_{i}") + F.lit(0.5))
-            / (F.col(f"_df_{i}") + F.lit(0.5))
-        )
-        score = score + idf * (
-            tf
-            * (1.0 + k1)
-            / (tf + k1 * (1.0 - b + b * F.col("_dl") / F.col("_avgdl")))
-        )
-    keep = [c for c in df.columns]
-    return bound.select(*keep, score.alias("bm25"))
 
 
 def bm25_e6_oracle_sql(

@@ -48,7 +48,6 @@ def get_spark(
     app_name: str = "index_search_monorepo_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    arrow_max_records_per_batch: int = 1024,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -66,10 +65,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            str(arrow_max_records_per_batch),
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
         # fat string rows: keep broadcast threshold default (10 MB) for
         # dims. Fat-row parquet scans should ALSO cap the vectorized
         # reader's batch (spark.sql.parquet.columnarReaderBatchSize — its

@@ -1,13 +1,13 @@
-"""S8/F14 — Zephir MARC-JSON source (SURVEY.md §2.1 S8, §2.7 F14).
+"""S8/F14 — Zephir MARC-JSON records (SURVEY.md §2.1 S8, §2.7 F14).
 
 The reference reads a gzipped newline-delimited JSON export (one MARC record
 per line), skipping blank and malformed lines, and converts each dict to a
 pymarc Record (ht_marc_json_reader.py:11-102). MARC-JSON has dynamic keys
 (`fields: [{"008": "..."}, {"245": {"ind1": ..., "subfields": [...]}}]`), so
-a static from_json schema can't express it; instead a vectorized
-mapInPandas parse normalizes every record into the engine's columnar MARC
-shape, after which every downstream predicate/extract is a pure column
-expression (operators/marc_extracts.py):
+a static from_json schema can't express it; instead `marc_json_record_udf`,
+an Arrow-batched column function over the JSON lines, normalizes every
+record into the engine's columnar MARC shape, after which every downstream
+predicate/extract is a pure column expression (operators/marc_extracts.py):
 
     (leader: string,
      fields: array<struct<tag:string, data:string, ind1:string, ind2:string,
@@ -21,10 +21,8 @@ the reference tolerates (ht_marc_json_reader.py:59-74).
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     ArrayType,
     StringType,
@@ -88,30 +86,13 @@ def normalize_marc_dict(data: dict) -> dict:
     return {"leader": data.get("leader"), "fields": fields}
 
 
-def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for line in pdf["value"]:
-            line = (line or "").strip()
-            if not line:
-                continue
-            try:
-                data = json.loads(line)
-                if isinstance(data, dict):
-                    rows.append(normalize_marc_dict(data))
-            except (json.JSONDecodeError, AttributeError, TypeError,
-                    ValueError):
-                continue  # skip malformed/unexpressible, like MarcJsonReader
-        yield pd.DataFrame(rows, columns=["leader", "fields"])
-
-
 def marc_json_record_udf():
     """S8 in column form: one MARC-JSON line string -> normalized record
-    struct (leader, fields) through the SAME normalize_marc_dict the file
-    source uses. Blank/malformed/non-dict lines yield a null-leader record
-    so callers can filter them — the column-level mirror of the reader's
-    line-skip (ht_marc_json_reader.py:11-29). Arrow-batched pandas UDF,
-    one stage, no shuffle.
+    struct (leader, fields) through normalize_marc_dict. Blank/malformed/
+    non-dict lines yield a null-leader record so callers can filter them —
+    the column-level mirror of the reader's line-skip
+    (ht_marc_json_reader.py:11-29). Arrow-batched pandas UDF, one stage,
+    no shuffle.
 
     Marked nondeterministic ON PURPOSE (it is in fact deterministic):
     callers filter on the parsed struct (`rec.leader IS NOT NULL`), and
@@ -144,10 +125,3 @@ def marc_json_record_udf():
         return pd.DataFrame(rows, columns=["leader", "fields"])
 
     return parse.asNondeterministic()
-
-
-def read_marc_json(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed scan of newline-delimited MARC-JSON (gzip transparent via
-    the text source), one normalized record per row. Blank and malformed
-    lines are dropped, matching the reference reader."""
-    return spark.read.text(path).mapInPandas(_parse_batches, schema=MARC_SCHEMA)

@@ -1,28 +1,24 @@
-"""S2/A3/X — METS structMap ingest (SURVEY.md §2.1 S2, §2.4 A3).
+"""S2/A3 — METS structMap parse (SURVEY.md §2.1 S2, §2.4 A3).
 
 The reference parses one METS XML per document with lxml
 (mets_file_extractor.py:11-86): `structMap -> div TYPE='page'` carries
 ORDER (page number), ORDERLABEL (pgnum), LABEL (comma-separated feature
 tags), and child `fptr FILEID`s (TXT/HTML/IMG pointers); doc-level attributes
 scanning-order / reading-order / cover-tag come from the structMap div
-labels. Rebuilt as a distributed scan of METS files:
-
-    spark.read.format("binaryFile") over *.mets.xml
-      -> mapInPandas batch parse (stdlib ElementTree; no lxml in-container)
-      -> mets_meta rows: (doc_id, page_features array<struct<offset,
-         features, pgnum>>, scanning_order, reading_order, cover_tag)
-
-consumed by operators.extraction.with_mets_fields (ht_page_feature /
-ht_scanning_order / ht_reading_order / ht_cover_tag, §1.3 step 6).
+labels. `parse_mets` is that parse on stdlib ElementTree (no lxml
+in-container); `mets_record_udf` runs it as an Arrow-batched column
+function, one METS XML string -> a mets_meta struct (page_features
+array<struct<offset, features, pgnum>>, scanning_order, reading_order,
+cover_tag), the shape operators.extraction.with_mets_fields consumes
+(ht_page_feature / ht_scanning_order / ht_reading_order / ht_cover_tag,
+§1.3 step 6).
 """
 
 from __future__ import annotations
 
 import xml.etree.ElementTree as ET
-from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -31,13 +27,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from index_search_monorepo_spark.sources.zip_ingest import doc_id_from_zip_path
-
 METS_NS = "http://www.loc.gov/METS/"
 
-METS_META_SCHEMA = StructType(
+METS_RECORD_SCHEMA = StructType(
     [
-        StructField("doc_id", StringType()),
         StructField(
             "page_features",
             ArrayType(
@@ -93,26 +86,12 @@ def parse_mets(xml_text: str) -> dict:
     }
 
 
-def distinct_features(pages: list[dict]) -> list[str]:
-    """A3: split each page LABEL on ', ', flatten, distinct
-    (mets_file_extractor.py:52-61)."""
-    seen: list[str] = []
-    for p in pages:
-        for f in (p.get("features") or "").split(", "):
-            if f and f not in seen:
-                seen.append(f)
-    return sorted(seen)
-
-
-METS_RECORD_SCHEMA = StructType(METS_META_SCHEMA.fields[1:])  # minus doc_id
-
 
 def mets_record_udf():
     """S2 in column form: one METS XML string -> parsed mets_meta struct
-    (page_features, scanning_order, reading_order, cover_tag) through the
-    SAME parse_mets the file source uses — lets the driver oracle gate the
-    stdlib-ET structMap parse on planted documents the way allfields_xml
-    gates the MARC fold. Unparseable XML — malformed markup OR well-formed
+    (page_features, scanning_order, reading_order, cover_tag) through
+    parse_mets — lets the driver oracle gate the stdlib-ET structMap parse
+    on planted documents the way allfields_xml gates the MARC fold. Unparseable XML — malformed markup OR well-formed
     XML with a non-numeric page ORDER (parse_mets raises ValueError) —
     yields a null-scanning_order record: errors are rows, never task
     failures. Arrow-batched, one stage, no shuffle.
@@ -143,36 +122,3 @@ def mets_record_udf():
         )
 
     return parse.asNondeterministic()
-
-
-def _mets_batches(
-    namespace: str | None,
-) -> "callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]":
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                doc_id = doc_id_from_zip_path(
-                    path.removesuffix(".mets.xml") if path.endswith(".mets.xml")
-                    else path,
-                    namespace,
-                )
-                parsed = parse_mets(bytes(content).decode("utf-8"))
-                rows.append({"doc_id": doc_id, **parsed})
-            yield pd.DataFrame(rows, columns=METS_META_SCHEMA.fieldNames())
-
-    return fn
-
-
-def ingest_mets_files(
-    spark: SparkSession,
-    path_glob: str,
-    namespace: str | None = None,
-) -> DataFrame:
-    binary = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.mets.xml")
-        .load(path_glob)
-        .select("path", "content")
-    )
-    return binary.mapInPandas(_mets_batches(namespace), schema=METS_META_SCHEMA)

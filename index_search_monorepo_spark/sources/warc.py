@@ -1,39 +1,23 @@
-"""WARC (ISO 28500) web-archive source — the web-scale ingest path.
+"""WARC (ISO 28500) web-archive records: a reader, a writer and the
+round-trip gate kernel.
 
 The reference's container ingest opens one zip volume per document and
 streams its members (full_text_document_generator.py:74-109); WARC is the
-same "many records in one sequential container" shape at crawl scale, and
-the north rule's extraction tier starts from exactly this source (fetch
-container -> HTTP payload -> HTML -> main content). Layout here:
+same "many records in one sequential container" shape at crawl scale
+(fetch container -> HTTP payload -> HTML -> main content).
 
-    spark.read.format("binaryFile").load(glob)
-      -> mapInPandas generator (one Python call per batch of WARC files,
-         records streamed one at a time — task memory is one record, not
-         one file)
-      -> (warc_file, rec_offset, warc_type, record_id, target_uri,
-          warc_date, content_type, http_status, http_content_type,
-          payload, error)
-
-Format/scale notes:
- - production WARCs are concatenated gzip MEMBERS, one record per member
-   (ISO 28500 annex D recommendation) so readers can stream record
-   boundaries without decompressing the whole file; this reader handles
-   both that layout and plain uncompressed WARC.
- - a gzip stream is not byte-range splittable, so the parallelism unit is
-   the FILE — the standard Spark-over-CommonCrawl shape: ~1 GB per WARC,
-   one task each, tens of thousands of concurrent tasks at crawl scale.
-   `spark.sql.files.maxPartitionBytes` does not split these (binaryFile
-   rows are atomic); balance comes from file count >> cores.
- - malformed records are ERROR ROWS (error envelope: `error` column set,
-   parse continues at the next gzip member when possible), never job
-   failures.
-
-The writer (`build_warc`) exists for tests and the round-trip gate: the
-driver oracle can't synthesize binary containers, so the contract entry
-builds WARC bytes from planted columns IN the query, parses them with this
-real reader, and exposes oracle-predictable scalars (status, payload
-length, extracted-text md5) — the same planted-payload pattern as the
-multimodal gate.
+ - `iter_warc_records` streams records out of one WARC blob: production
+   WARCs are concatenated gzip MEMBERS, one record per member (ISO 28500
+   annex D recommendation), so a reader finds record boundaries without
+   decompressing the whole file; plain uncompressed WARC parses too.
+   Malformed records are ERROR ROWS (`error` set, parse continues at the
+   next gzip member when possible), never failures.
+ - `build_warc` writes them. The driver oracle can't synthesize binary
+   containers, so the gate kernel (`warc_roundtrip_udf`) builds WARC bytes
+   from planted columns IN the query, parses them with the reader above,
+   and exposes oracle-predictable scalars (status, payload length,
+   extracted-text md5; `oracle_warc_sql` is the DuckDB side) — the same
+   planted-payload pattern as the multimodal gate.
 """
 
 from __future__ import annotations
@@ -45,9 +29,7 @@ import zlib
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
-    BinaryType,
     LongType,
     StringType,
     StructField,
@@ -58,22 +40,6 @@ from index_search_monorepo_spark.functions.html import extract_main_content
 
 CRLF = b"\r\n"
 WARC_VERSION = b"WARC/1.0"
-
-WARC_RECORD_SCHEMA = StructType(
-    [
-        StructField("warc_file", StringType()),
-        StructField("rec_offset", LongType()),
-        StructField("warc_type", StringType()),
-        StructField("record_id", StringType()),
-        StructField("target_uri", StringType()),
-        StructField("warc_date", StringType()),
-        StructField("content_type", StringType()),
-        StructField("http_status", LongType()),
-        StructField("http_content_type", StringType()),
-        StructField("payload", BinaryType()),
-        StructField("error", StringType()),
-    ]
-)
 
 
 # ------------------------------------------------------------------ writer
@@ -298,69 +264,6 @@ _EMPTY_REC = {
 }
 
 
-# ------------------------------------------------------------ spark scan
-
-
-def warc_scan(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed WARC scan: binaryFile -> mapInPandas generator, one
-    output row per WARC record. File = parallelism unit (gzip is not
-    range-splittable); records stream through the generator so peak task
-    memory is one batch of records, not one file's records."""
-    binary = spark.read.format("binaryFile").load(path).select(
-        "path", "content"
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = WARC_RECORD_SCHEMA.fieldNames()
-        for pdf in batches:
-            rows = []
-            for path_, blob in zip(pdf["path"], pdf["content"]):
-                for rec in iter_warc_records(bytes(blob)):
-                    rows.append({"warc_file": path_, **rec})
-                if rows and len(rows) >= 256:
-                    yield pd.DataFrame(rows, columns=cols)
-                    rows = []
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-    return binary.mapInPandas(gen, WARC_RECORD_SCHEMA)
-
-
-def warc_to_documents(
-    warc_df: DataFrame, dom_weights: bool = True
-) -> DataFrame:
-    """Response records -> (doc_id, text): HTML payloads through the REAL
-    boilerplate extractor (functions/html.py), doc_id = target URI. One
-    Arrow stage on top of the scan, no shuffle; non-HTML and error rows
-    drop here (they remain visible in the scan frame for the error sink).
-    DOM class/id weights default ON for web pages (comment threads and
-    nav chrome are exactly what they exist for)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keep = pdf[
-                (pdf["warc_type"] == "response")
-                & pdf["error"].isna()
-                & (pdf["http_status"] == 200)
-                & pdf["http_content_type"].fillna("").str.startswith("text/html")
-            ]
-            texts = [
-                extract_main_content(
-                    bytes(p).decode("utf-8", "replace") if p is not None else "",
-                    dom_weights=dom_weights,
-                )
-                for p in keep["payload"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": list(keep["target_uri"]), "text": texts}
-            )
-
-    schema = StructType(
-        [StructField("doc_id", StringType()), StructField("text", StringType())]
-    )
-    return warc_df.mapInPandas(gen, schema)
-
-
 # ------------------------------------------------- round-trip gate kernel
 
 
@@ -547,36 +450,3 @@ def oracle_warc_sql(id_expr: str, text_expr: str) -> dict[str, str]:
             " ELSE 'http://ex.org/n' END"
         ),
     }
-
-
-def warc_stream_scan(spark: SparkSession, path: str) -> DataFrame:
-    """Incremental crawl ingest: the SAME record parse as `warc_scan` over
-    a Structured Streaming binaryFile source — new WARC files landing in
-    `path` flow through as record rows (file = discovery unit, exactly
-    once per file via the stream's file-source checkpoint). Compose with
-    `warc_to_documents` + the streaming dedup/assembler stages unchanged
-    (mapInPandas is fully streaming-capable; no state here)."""
-    binary = (
-        spark.readStream.format("binaryFile")
-        # streaming sources take no schema inference; this is binaryFile's
-        # fixed schema
-        .schema(
-            "path string, modificationTime timestamp,"
-            " length long, content binary"
-        )
-        .option("pathGlobFilter", "*.warc*")
-        .load(path)
-        .select("path", "content")
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = WARC_RECORD_SCHEMA.fieldNames()
-        for pdf in batches:
-            rows = []
-            for path_, blob in zip(pdf["path"], pdf["content"]):
-                for rec in iter_warc_records(bytes(blob)):
-                    rows.append({"warc_file": path_, **rec})
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-    return binary.mapInPandas(gen, WARC_RECORD_SCHEMA)

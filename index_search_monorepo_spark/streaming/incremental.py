@@ -22,7 +22,8 @@ watermarks, no windows. The Spark rebuild maps:
 New vs the reference (net-new Spark capability, not a port): event-time
 tumbling windows with watermarked late-data handling over the ingest stream,
 used for the span-count monitoring metrics the reference logs per document
-(full_text_document_generator.py:155-180).
+(full_text_document_generator.py:155-180), and a keyed-state near-duplicate
+filter over the stream's MinHash bands (`streaming_lsh_dedup`).
 """
 
 from __future__ import annotations
@@ -34,7 +35,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
     ArrayType,
-    BooleanType,
     IntegerType,
     StringType,
     StructField,
@@ -144,129 +144,6 @@ def incremental_extraction(
     return q
 
 
-CHUNK_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType()),
-        StructField("spans", ArrayType(SPAN_STRUCT)),
-        StructField("n_expected", IntegerType()),
-    ]
-)
-
-ASSEMBLED_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType()),
-        StructField("spans", ArrayType(SPAN_STRUCT)),
-        StructField("n_spans", IntegerType()),
-        StructField("complete", BooleanType()),
-    ]
-)
-
-_ASSEMBLER_STATE = StructType(
-    [
-        StructField("chunks_json", StringType()),
-        StructField("n_expected", IntegerType()),
-    ]
-)
-
-
-def stateful_doc_assembler(
-    chunk_stream: DataFrame, timeout_ms: int | None = None
-) -> DataFrame:
-    """Custom stateful operator (applyInPandasWithState): assemble documents
-    whose span chunks arrive across micro-batches.
-
-    The reference's retriever streams a document's pages in parts and the
-    generator assembles them before indexing (full_text_search_retriever_
-    service.py batching + full_text_document_generator.py assembly); in the
-    streaming rebuild that becomes keyed state per doc_id: each incoming
-    chunk row is (doc_id, spans, n_expected); the operator accumulates spans
-    until n_expected are present, then emits the document with its spans in
-    canonical (offset, media_ref) order and drops the state. A processing-
-    time timeout (timeout_ms, long-lived poll-mode queries only) flushes
-    stalled documents as complete=false rows — the DLQ analog (errors are
-    rows, never job failures). The default is no timeout: a drain-mode
-    run (trigger(availableNow)) otherwise keeps scheduling empty
-    state-cleanup batches until the timeout horizon passes before it can
-    terminate.
-
-    Scale: state is per-in-flight-document only (completed keys are removed
-    immediately), partitioned by doc_id across executors by the streaming
-    state store; a 10^12-doc backfill holds state only for the documents
-    currently split across batch boundaries, not the corpus.
-
-    State is kept as a JSON string rather than nested Arrow arrays: chunk
-    arrival order is not ordered anyway (order rides in `offset` — repo
-    convention), and a flat string state avoids per-batch Arrow struct
-    round-trips of fat page text.
-    """
-    import json
-
-    import pandas as pd
-
-    def assemble(key, pdfs, state):
-        doc_id = key[0]
-        if state.hasTimedOut:
-            chunks_json, n_expected = state.get
-            spans = json.loads(chunks_json)
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "doc_id": [doc_id],
-                    "spans": [_canonical(spans)],
-                    "n_spans": [len(spans)],
-                    "complete": [False],
-                }
-            )
-            return
-        spans: list[dict] = []
-        n_expected = None
-        if state.exists:
-            chunks_json, n_expected = state.get
-            spans = json.loads(chunks_json)
-        for pdf in pdfs:
-            for _, row in pdf.iterrows():
-                for s in row["spans"]:
-                    d = dict(s) if not isinstance(s, dict) else s
-                    spans.append(
-                        {
-                            "kind": d["kind"],
-                            "text": d["text"],
-                            "media_ref": d["media_ref"],
-                            "offset": int(d["offset"]),
-                        }
-                    )
-                if row["n_expected"] is not None:
-                    n_expected = int(row["n_expected"])
-        if n_expected is not None and len(spans) >= n_expected:
-            if state.exists:
-                state.remove()
-            yield pd.DataFrame(
-                {
-                    "doc_id": [doc_id],
-                    "spans": [_canonical(spans)],
-                    "n_spans": [len(spans)],
-                    "complete": [True],
-                }
-            )
-        else:
-            state.update((json.dumps(spans), n_expected))
-            if timeout_ms is not None:
-                state.setTimeoutDuration(timeout_ms)
-
-    def _canonical(spans: list[dict]) -> list[dict]:
-        return sorted(spans, key=lambda s: (s["offset"], s["media_ref"]))
-
-    return chunk_stream.groupBy("doc_id").applyInPandasWithState(
-        assemble,
-        outputStructType=ASSEMBLED_SCHEMA,
-        stateStructType=_ASSEMBLER_STATE,
-        outputMode="append",
-        timeoutConf=(
-            "ProcessingTimeTimeout" if timeout_ms is not None else "NoTimeout"
-        ),
-    )
-
-
 def windowed_ingest_metrics(
     stream: DataFrame,
     window: str = "1 minute",
@@ -292,36 +169,6 @@ def windowed_ingest_metrics(
             "n_spans",
             "n_txt_spans",
         )
-    )
-
-
-def streaming_exact_dedup(
-    stream: DataFrame,
-    text_col: str = "text_concat",
-    id_col: str = "doc_id",
-    watermark: str = "10 minutes",
-    ts_col: str = "ingest_ts",
-) -> DataFrame:
-    """Incremental exact dedup for a training-data ingest stream: keep the
-    FIRST arrival of each content hash, drop every later copy — the
-    streaming counterpart of operators/dedup.exact_duplicates.
-
-    Spark-native: `dropDuplicatesWithinWatermark` on the md5 content key.
-    The watermark BOUNDS THE STATE — per-key state is dropped once the key
-    is older than the watermark, so state size is (unique keys per
-    watermark window), not (all keys ever): the property that makes
-    streaming dedup viable at 100 TB/day ingest. The trade is explicit and
-    standard (cf. Spark docs): a duplicate arriving later than the
-    watermark after its original is re-emitted; downstream batch dedup
-    (C1) remains the exactness backstop.
-    """
-    keyed = stream.select(
-        F.col(id_col),
-        F.col(ts_col),
-        F.md5(F.col(text_col)).alias("content_key"),
-    )
-    return keyed.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        ["content_key"]
     )
 
 

@@ -64,27 +64,6 @@ class TestGeometry:
             rebuilt = [t for c in r["chunks"] for t in c.split(" ") if t]
             assert rebuilt == toks
 
-    def test_chunk_grain_consistency(self, spark):
-        size, overlap = 4, 1
-        per_doc = {
-            r["doc_id"]: r
-            for r in PK.with_chunks(
-                _corpus(spark), size=size, overlap=overlap
-            ).collect()
-        }
-        rows = PK.chunk_documents(
-            _corpus(spark), size=size, overlap=overlap
-        ).collect()
-        seen: dict[int, list] = {}
-        for r in rows:
-            seen.setdefault(r["doc_id"], []).append(r)
-            assert r["chunk_text"] == per_doc[r["doc_id"]]["chunks"][r["chunk_no"]]
-            assert r["chunk_n_tokens"] == len(
-                [t for t in r["chunk_text"].split(" ") if t]
-            )
-        for doc_id, r in per_doc.items():
-            assert len(seen.get(doc_id, [])) == r["n_chunks"]
-
     def test_validation(self, spark):
         df = _corpus(spark)
         with pytest.raises(ValueError, match="overlap"):
@@ -139,16 +118,6 @@ class TestOraclesAndPlan:
         assert "Exchange" not in plan, plan
         assert "EvalPython" not in plan, plan
 
-    def test_chunk_grain_single_generate(self, spark):
-        plan = (
-            PK.chunk_documents(_corpus(spark))
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert plan.count("Generate") == 1, plan
-        assert "Exchange" not in plan, plan
-
 
 class TestChunkedRetrieval:
     """The retrieval-corpus composition the chunker exists for: chunk the
@@ -171,7 +140,9 @@ class TestChunkedRetrieval:
             [(0, filler), (1, planted), (2, filler)],
             "doc_id long, text string",
         )
-        chunks = PK.chunk_documents(docs, size=16, overlap=4).select(
+        chunks = PK.with_chunks(docs, size=16, overlap=4).select(
+            "doc_id", F.posexplode("chunks").alias("chunk_no", "chunk_text")
+        ).select(
             (F.col("doc_id") * 1000 + F.col("chunk_no")).alias("chunk_id"),
             "doc_id",
             "chunk_no",

@@ -205,6 +205,21 @@ class TestDuplicateClusters:
         out = {r["doc_id"]: r["cluster_id"] for r in D.duplicate_clusters(pairs).collect()}
         assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20}
 
+    def test_one_call_leaves_one_checkpoint(self, spark):
+        """Each round's localCheckpoint is released once the next one is
+        materialized: a multi-round call leaves only the checkpoint its
+        lazy result reads, and that result still reads correctly."""
+        persistent = spark.sparkContext._jsc.getPersistentRDDs
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(11)], "doc_a LONG, doc_b LONG"
+        )
+        before = set(persistent().keySet())
+        out = D.duplicate_clusters(pairs)
+        # ids, not a size delta: the context cleaner may free earlier
+        # tests' unreferenced checkpoints during the call
+        assert len(set(persistent().keySet()) - before) == 1
+        assert {r["cluster_id"] for r in out.collect()} == {0}
+
     def test_exactly_one_canonical_per_cluster(self, spark):
         docs = _docs(spark).filter(F.col("doc_id") < 50)
         planted = docs.unionByName(
@@ -235,7 +250,6 @@ class TestTextstatsSinglePass:
         docs = _docs(spark)
         for op in (
             TS.with_quality_score,
-            TS.with_lang_id,
             TS.with_token_count,
             TS.with_quality_signals,
             # r3 merged one-pass variants: combining two families must NOT
@@ -528,50 +542,6 @@ class TestKeepGuard:
             TS.with_token_stats(
                 docs.withColumn("n_tokens", F.lit(1)), keep=("n_tokens",)
             )
-
-
-class TestMixtureReport:
-    def test_matches_python_rollup(self, spark):
-        """The report must equal a driver-side rollup of the two per-doc
-        operators it composes (each already driver-oracle-gated at doc
-        grain), including the integer per-mille shares."""
-        docs = _docs(spark)
-        lang = {
-            r["doc_id"]: r["ngram_guess"]
-            for r in TS.with_lang_id_full(docs).collect()
-        }
-        qual = {
-            r["doc_id"]: (r["quality_band"], r["n_tokens"], r["n_chars"])
-            for r in TS.with_quality(docs).collect()
-        }
-        exp = {}
-        for did, (band, ntok, nch) in qual.items():
-            key = (lang[did], band)
-            d = exp.setdefault(key, [0, 0, 0])
-            d[0] += 1
-            d[1] += ntok
-            d[2] += nch
-        corpus_tokens = sum(v[1] for v in exp.values())
-        corpus_docs = sum(v[0] for v in exp.values())
-        got = {
-            (r["ngram_guess"], r["quality_band"]): r.asDict()
-            for r in TS.corpus_mixture_report(docs).collect()
-        }
-        assert set(got) == set(exp)
-        for key, (nd, ntok, nch) in exp.items():
-            g = got[key]
-            assert (g["n_docs"], g["total_tokens"], g["total_chars"]) == (
-                nd, ntok, nch), key
-            assert g["token_share_pmille"] == 1000 * ntok // corpus_tokens
-            assert g["doc_share_pmille"] == 1000 * nd // corpus_docs
-        assert sum(g["n_docs"] for g in got.values()) == corpus_docs
-
-    def test_single_scan(self, spark):
-        out = TS.corpus_mixture_report(_docs(spark))
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        head = plan.split("== Initial Plan ==")[0]
-        assert head.count("Scan parquet") == 1, head
-        assert "EvalPython" not in head
 
 
 class TestLineDedup:

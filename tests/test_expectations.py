@@ -200,71 +200,3 @@ def test_extra_aggs_single_pass(spark):
             li, [{"rule_id": "x", "kind": "row_count"}],
             extra_aggs=[F.count("*").alias("n")],
         )
-
-
-def test_streaming_checks_per_window(spark, tmp_path):
-    """Per-window quality metrics on an ingest stream: a bad window flags
-    while a clean one passes; distinct-family rules raise upfront."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    checks = [
-        {"rule_id": "v_nn", "kind": "completeness", "column": "v",
-         "min_permille": 1000},
-        {"rule_id": "v_rng", "kind": "bounds", "column": "v", "lo": 0,
-         "hi": 100},
-    ]
-    (tmp_path / "nope").mkdir()
-    with pytest.raises(ValueError, match="distinct aggregates"):
-        EXP.streaming_check_constraints(
-            spark.readStream.schema("ts timestamp, v long").parquet(
-                str(tmp_path / "nope")
-            ),
-            checks + [{"rule_id": "u", "kind": "uniqueness", "column": "v"}],
-            ts_col="ts",
-        )
-    rows = [
-        # window 10:00: clean
-        ("2026-01-01 10:00:05", 5),
-        ("2026-01-01 10:01:00", 7),
-        # window 10:10: a NULL and an out-of-range value
-        ("2026-01-01 10:10:05", None),
-        ("2026-01-01 10:11:00", 999),
-        # late row far ahead advances the watermark so both windows close
-        ("2026-01-01 11:00:00", 1),
-    ]
-    src = spark.createDataFrame(rows, "ts_s string, v long").select(
-        F.col("ts_s").cast("timestamp").alias("ts"), "v"
-    )
-    land = tmp_path / "land"
-    land.mkdir()
-    src.coalesce(1).write.parquet(str(tmp_path / "stage"))
-    shutil.copy(next((tmp_path / "stage").glob("*.parquet")),
-                land / "b0.parquet")
-    stream = spark.readStream.schema(src.schema).parquet(str(land))
-    # TIMESTAMP_NTZ pin (CLAUDE.md): parquet timestamps come back NTZ
-    stream = stream.withColumn(
-        "ts", F.to_utc_timestamp(F.col("ts").cast("timestamp"), "UTC")
-    )
-    q = (
-        EXP.streaming_check_constraints(
-            stream, checks, ts_col="ts", window="10 minutes",
-            watermark="1 minutes",
-        )
-        .writeStream.format("memory")
-        .queryName("exp_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        str(r["window_start"])[-8:]: r
-        for r in spark.sql("SELECT * FROM exp_stream").collect()
-    }
-    assert "10:00:00" in got and "10:10:00" in got
-    clean, dirty = got["10:00:00"], got["10:10:00"]
-    assert clean["v_nn_ok"] == 1 and clean["v_rng_ok"] == 1
-    assert dirty["v_nn_ok"] == 0 and dirty["v_nn_obs"] == 500
-    assert dirty["v_rng_ok"] == 0 and dirty["v_rng_obs"] == 1

@@ -1,107 +1,32 @@
-"""S1/S2 ingest sources: raw zip volumes and METS XML -> spans/mets_meta
-(SURVEY.md §2.1 S1/S2, §2.4 A3, §2.7 F6)."""
+"""S2 METS structMap parse and the F6 pairtree id mirrors
+(SURVEY.md §2.1 S2, §2.4 A3, §2.7 F6)."""
 
 from __future__ import annotations
 
-import zipfile
-
-from pyspark.sql import functions as F
-
-from index_search_monorepo_spark.operators.errors import split_errors
-from index_search_monorepo_spark.operators.extraction import with_ocr
 from index_search_monorepo_spark.oracle.reference_oracle import (
-    oracle_string_preparation,
+    oracle_doc_id_from_zip_path,
+    oracle_pairtree_path,
+    oracle_pairtree_sanitize,
 )
-from index_search_monorepo_spark.sources.mets_ingest import (
-    distinct_features,
-    ingest_mets_files,
-    parse_mets,
-)
-from index_search_monorepo_spark.sources.zip_ingest import (
-    doc_id_from_zip_path,
-    ingest_zip_volumes,
-    pairtree_path,
-    pairtree_sanitize,
-)
-
-PAGES = {
-    "00000001.txt": "First page\r\nwith CRLF & <markup>",
-    "00000002.txt": "  second page, stripped  ",
-    "00000003.txt": 'quotes "inside" page three',
-}
-
-
-def _write_zip(path, pages=PAGES, extra=None, bad_utf8=False):
-    with zipfile.ZipFile(path, "w") as zf:
-        for name, text in pages.items():
-            zf.writestr(name, text.encode("utf-8"))
-        zf.writestr("__MACOSX/00000001.txt", "resource fork junk")
-        zf.writestr("notes.xml", "<x/>")  # unclassified member: dropped
-        zf.writestr("00000002.html", "<html><body>page two</body></html>")
-        zf.writestr("00000001.jp2", b"\x00\x01binary")
-        if bad_utf8:
-            zf.writestr("00000004.txt", b"\xff\xfe broken")
-        if extra:
-            for name, data in extra.items():
-                zf.writestr(name, data)
-
-
-def test_zip_ingest_spans(spark, tmp_path):
-    _write_zip(tmp_path / "39015078560292.zip")
-    df = ingest_zip_volumes(spark, str(tmp_path), namespace="mb")
-    rows = df.collect()
-    assert len(rows) == 1
-    row = rows[0]
-    assert row["doc_id"] == "mb.39015078560292"
-    spans = [(s["kind"], s["media_ref"], s["offset"]) for s in row["spans"]]
-    # sorted member order; __MACOSX and unclassified members excluded;
-    # offsets from numeric stems
-    assert spans == [
-        ("img", "00000001.jp2", 1),
-        ("txt", "00000001.txt", 1),
-        ("html", "00000002.html", 2),
-        ("txt", "00000002.txt", 2),
-        ("txt", "00000003.txt", 3),
-    ]
-    txt = {s["media_ref"]: s["text"] for s in row["spans"] if s["kind"] == "txt"}
-    assert txt["00000001.txt"] == PAGES["00000001.txt"]  # raw at ingest
-
-
-def test_zip_ingest_ocr_matches_reference_semantics(spark, tmp_path):
-    """A1 over ingested spans == the reference's txt_files_2_full_text
-    (full_text_document_generator.py:74-109): per-member string_preparation,
-    sorted by member name, single-space join."""
-    _write_zip(tmp_path / "vol1.zip")
-    df = ingest_zip_volumes(spark, str(tmp_path))
-    got = with_ocr(df).select("ocr").first()["ocr"]
-    want = " ".join(
-        oracle_string_preparation(PAGES[k].encode("utf-8")) for k in sorted(PAGES)
-    )
-    assert got == want
-
-
-def test_zip_ingest_bad_utf8_routes_to_error_sink(spark, tmp_path):
-    _write_zip(tmp_path / "good.zip")
-    _write_zip(tmp_path / "bad.zip", bad_utf8=True)
-    df = ingest_zip_volumes(spark, str(tmp_path))
-    clean, errors = split_errors(df)
-    assert [r["doc_id"] for r in clean.collect()] == ["good"]
-    err = errors.collect()
-    assert len(err) == 1 and err[0]["ht_id"] == "bad"
+from index_search_monorepo_spark.sources.mets_ingest import parse_mets
 
 
 def test_pairtree_parity():
     """Golden values from the reference's own tests
     (ht_document_test.py:10-23, 46-54)."""
-    assert pairtree_path("39015051333915") == (
+    assert oracle_pairtree_path("39015051333915") == (
         "/39/01/50/51/33/39/15/39015051333915"
     )
-    assert pairtree_sanitize("ark:/13960/t4mk66f1d") == "ark+=13960=t4mk66f1d"
-    assert pairtree_path("ark:/13960/t4mk66f1d") == (
+    assert oracle_pairtree_sanitize("ark:/13960/t4mk66f1d") == (
+        "ark+=13960=t4mk66f1d"
+    )
+    assert oracle_pairtree_path("ark:/13960/t4mk66f1d") == (
         "/ar/k+/=1/39/60/=t/4m/k6/6f/1d/ark+=13960=t4mk66f1d"
     )
     assert (
-        doc_id_from_zip_path("file:/sdr1/obj/ark+=13960=t4mk66f1d.zip", "uc2")
+        oracle_doc_id_from_zip_path(
+            "file:/sdr1/obj/ark+=13960=t4mk66f1d.zip", "uc2"
+        )
         == "uc2.ark:/13960/t4mk66f1d"
     )
 
@@ -137,28 +62,10 @@ def test_parse_mets():
         {"offset": 2, "features": "CHAPTER_START, IMPLICIT_PAGE_NUMBER",
          "pgnum": "1"},
     ]
-    # A3 distinct feature set (mets_file_extractor.py:52-61)
-    assert distinct_features(parsed["page_features"]) == [
-        "CHAPTER_START", "FRONT_COVER", "IMPLICIT_PAGE_NUMBER",
-    ]
-
-
-def test_ingest_mets_files(spark, tmp_path):
-    (tmp_path / "39015078560292.mets.xml").write_text(METS_XML)
-    df = ingest_mets_files(spark, str(tmp_path), namespace="mb")
-    row = df.collect()[0]
-    assert row["doc_id"] == "mb.39015078560292"
-    assert row["scanning_order"] == "right-to-left"
-    assert [p["offset"] for p in row["page_features"]] == [1, 2]
-    # shape-compatible with the pipeline's mets_meta input
-    from index_search_monorepo_spark.operators.extraction import with_mets_fields
-
-    out = with_mets_fields(df).collect()[0]
-    assert "FRONT_COVER" in out["ht_page_feature"]
 
 
 def test_mets_record_udf_column_form(spark):
-    """S2 column form: same parse_mets as the file source; malformed XML
+    """S2 column form: parse_mets per row; malformed XML
     yields a null record instead of a task failure (errors-are-rows)."""
     from pyspark.sql import functions as F
 

@@ -1,20 +1,18 @@
-"""S8 MARC-JSON source + dissertation extract family (P8/P9/F9)."""
+"""S8 MARC-JSON records + dissertation extract predicates (P8/P9/F9)."""
 
 from __future__ import annotations
 
-import gzip
 import json
 
 from pyspark.sql import functions as F
 
 from index_search_monorepo_spark.operators.marc_extracts import (
-    dissertation_rows,
     has_institution_expr,
     keyword_text_expr,
     matches_keywords_expr,
     pub_year_expr,
 )
-from index_search_monorepo_spark.sources.marc_json import read_marc_json
+from index_search_monorepo_spark.sources.marc_json import marc_json_record_udf
 
 
 def _rec(control, title_a, title_b=None, keywords_502=None, inst=None,
@@ -53,40 +51,10 @@ RECORDS = [
 ]
 
 
-def _write_gz(path):
-    with gzip.open(path, "wt", encoding="utf-8") as fh:
-        fh.write(json.dumps(RECORDS[0]) + "\n")
-        fh.write("\n")  # blank line skipped
-        fh.write("{not json}\n")  # malformed skipped
-        fh.write(json.dumps(RECORDS[1]) + "\n")
-        fh.write(json.dumps(RECORDS[2]) + "\n")
-
-
-def test_read_marc_json_gz(spark, tmp_path):
-    p = tmp_path / "zephir.json.gz"
-    _write_gz(p)
-    df = read_marc_json(spark, str(p))
-    rows = df.collect()
-    assert len(rows) == 3  # blank + malformed dropped
-    r1 = next(r for r in rows if r["fields"][0]["data"] == "r1")
-    assert r1["leader"].startswith("01234")
-    tags = [f["tag"] for f in r1["fields"]]
-    assert tags[0] == "001" and "245" in tags and "974" in tags
-    # list-encoded subfield accepted
-    f100 = next(f for f in r1["fields"] if f["tag"] == "100")
-    assert f100["subfields"][0]["code"] == "a"
-
-
 def test_marc_json_record_udf_column_form(spark):
-    """S8 column form: same normalize as the gz reader, null-leader rows
-    for blank/malformed/non-dict lines (the line-skip, as a filterable
+    """S8 column form: normalized records, null-leader rows for
+    blank/malformed/non-dict lines (the line-skip, as a filterable
     value)."""
-    from pyspark.sql import functions as F
-
-    from index_search_monorepo_spark.sources.marc_json import (
-        marc_json_record_udf,
-    )
-
     lines = [
         json.dumps(RECORDS[0]),
         "",
@@ -99,13 +67,16 @@ def test_marc_json_record_udf_column_form(spark):
     ).collect()
     assert rows[0]["rec"]["leader"].startswith("01234")
     assert rows[0]["rec"]["fields"][0]["data"] == "r1"
+    # list-encoded subfield accepted
+    f100 = next(f for f in rows[0]["rec"]["fields"] if f["tag"] == "100")
+    assert f100["subfields"][0]["code"] == "a"
     assert all(r["rec"]["leader"] is None for r in rows[1:])
 
 
-def test_predicates_and_extracts(spark, tmp_path):
-    p = tmp_path / "zephir.json.gz"
-    _write_gz(p)
-    df = read_marc_json(spark, str(p))
+def test_predicates_and_extracts(spark):
+    df = spark.createDataFrame(
+        [(json.dumps(r),) for r in RECORDS], ["value"]
+    ).select(marc_json_record_udf()(F.col("value")).alias("rec")).select("rec.*")
     out = df.select(
         F.col("fields")[0]["data"].alias("cn"),
         keyword_text_expr(F.col("fields")).alias("kw_text"),
@@ -122,33 +93,9 @@ def test_predicates_and_extracts(spark, tmp_path):
     assert by["r2"]["year"] == "1999"  # 260$c fallback
 
 
-def test_dissertation_rows(spark, tmp_path):
-    p = tmp_path / "zephir.json.gz"
-    _write_gz(p)
-    rows = dissertation_rows(read_marc_json(spark, str(p))).collect()
-    # only r1 passes keyword AND institution
-    assert len(rows) == 1
-    r = rows[0].asDict()
-    assert r == {
-        "control_number": "r1",
-        "title": "A Doctoral Study of things",
-        "author": "Author, Test",
-        "year_published": "2001",
-        "discipline": "Physics; Chemistry",
-        "other_sources": "id-r1; (OCoLC)123",
-    }
-
-
 def test_udf_valid_json_bad_marc_shape_is_dropped(spark):
     """r4 review finding: valid JSON whose field value is neither str nor
     dict (e.g. a number) must yield a null record, not a task failure."""
-    from pyspark.sql import functions as F
-
-    from index_search_monorepo_spark.sources.marc_json import (
-        marc_json_record_udf,
-        read_marc_json,
-    )
-
     df = spark.createDataFrame(
         [('{"leader":"x","fields":[{"008": 12}]}',)], ["value"]
     )

@@ -277,18 +277,6 @@ class TestFfdBinPacking:
         )
         assert a == b
 
-    def test_bin_stats_waste_accounting(self, spark):
-        rows = [(0, 7), (1, 3), (2, 15)]
-        df = spark.createDataFrame(rows, "doc_id long, n_tokens long")
-        packed = P.pack_bins_ffd(df, size=10, n_shards=1)
-        stats = {
-            (r["shard"], r["bin_id"]): (r["n_docs"], r["fill"], r["waste"])
-            for r in P.bin_stats(packed, size=10).collect()
-        }
-        # oversize bin: fill 15, waste clamps to 0; packed bin: 7+3 full
-        assert (0, 0) in stats and stats[(0, 0)] == (1, 15, 0)
-        assert stats[(0, 1)] == (2, 10, 0)
-
     def test_single_shuffle_one_python_stage(self, spark):
         rows = [(i, i % 9 + 1) for i in range(50)]
         df = spark.createDataFrame(rows, "doc_id long, n_tokens long")

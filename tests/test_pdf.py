@@ -1,6 +1,6 @@
 """PDF text/layout extraction: writer->parser round-trips (the jpeg.py
 conformance pattern), content-stream operator semantics, layout reading
-order, tolerance to malformed input, and the no-shuffle Spark kernels."""
+order, tolerance to malformed input, and the no-shuffle Spark kernel."""
 
 from __future__ import annotations
 
@@ -113,34 +113,21 @@ class TestSparkKernels:
                 b"broken payload",
             ],
         )
-        meta = {
-            r["doc_id"]: r for r in P.pdf_metadata(df).collect()
-        }
+        meta = {r["doc_id"]: r for r in P.pdf_profile(df).collect()}
         assert meta[0]["ok"] and meta[0]["n_pages"] == 2
         assert meta[0]["n_text_spans"] == 4  # 3 + 1 across both pages
         assert meta[0]["n_media_spans"] == 2  # one Do per page
+        assert meta[0]["doc_text"] == (
+            "First line. tail run.\nSecond line.\fPage two text."
+        )
         assert meta[1]["ok"] is False and meta[1]["n_pages"] == 0
-
-        spans = P.extract_pdf_spans(df).collect()
-        assert all(r["doc_id"] == 0 for r in spans)  # broken -> zero spans
-        page1 = [r for r in spans if r["page_no"] == 1]
-        assert [r["offset"] for r in page1] == [1, 2, 3, 4]
-        assert [r["kind"] for r in page1] == ["txt", "txt", "txt", "media"]
-
-        text = {
-            (r["doc_id"], r["page_no"]): r["page_text"]
-            for r in P.extract_pdf_text(df).collect()
-        }
-        assert text[(0, 1)] == "First line. tail run.\nSecond line."
+        assert meta[1]["doc_text"] == ""
 
     def test_no_shuffle_plan(self, spark):
         df = _payload_frame(spark, [P.build_pdf(PAGES)])
-        for kernel in (P.pdf_metadata, P.extract_pdf_spans, P.extract_pdf_text):
-            plan = (
-                kernel(df)._jdf.queryExecution().executedPlan().toString()
-            )
-            assert "Exchange" not in plan, plan
-            assert "MapInPandas" in plan, plan
+        plan = P.pdf_profile(df)._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, plan
+        assert "MapInPandas" in plan, plan
 
 
 class TestReviewRegressions:
@@ -175,48 +162,6 @@ class TestReviewRegressions:
         )
         d = P.parse_pdf(enc)
         assert d["ok"] is False and d["version"] == "1.4"
-
-
-class TestPdfAsPipelineSource:
-    def test_pdf_documents_contract_shape_and_ocr(self, spark):
-        """PDFs as a first-class source: pdf_documents emits the
-        BASELINE input contract (doc_id:string, spans array) and the
-        REAL extraction operators run on it unchanged."""
-        from index_search_monorepo_spark.operators.extraction import (
-            with_ocr,
-        )
-
-        df = _payload_frame(
-            spark,
-            [
-                P.build_pdf(PAGES, compress=True, images_per_page=1),
-                b"broken payload",
-            ],
-        )
-        docs = P.pdf_documents(df)
-        assert docs.schema.simpleString() == (
-            "struct<doc_id:string,spans:array<struct<kind:string,"
-            "text:string,media_ref:string,offset:int>>>"
-        )
-        rows = {r["doc_id"]: r["spans"] for r in docs.collect()}
-        assert rows["1"] == []  # broken -> empty spans, not a failure
-        kinds = [s["kind"] for s in rows["0"]]
-        assert kinds == ["txt", "txt", "txt", "media", "txt", "media"]
-        assert [s["offset"] for s in rows["0"]] == list(range(1, 7))
-        # the flagship A1 operator consumes it directly (content order)
-        ocr = {r["doc_id"]: r["ocr"] for r in with_ocr(docs).collect()}
-        assert "First line." in ocr["0"] and "Page two text." in ocr["0"]
-
-    def test_pdf_documents_no_shuffle(self, spark):
-        df = _payload_frame(spark, [P.build_pdf(PAGES)])
-        plan = (
-            P.pdf_documents(df)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "Exchange" not in plan, plan
-        assert "MapInPandas" in plan, plan
 
 
 from hypothesis import given, settings, strategies as st  # noqa: E402

@@ -233,7 +233,7 @@ def test_salted_repartition_balances_pages(spark, tables, monkeypatch):
         raise AssertionError("salted_repartition ran a driver-side pre-pass")
 
     monkeypatch.setattr(DataFrame, "collect", _boom)
-    df = salted_repartition(tables["documents_spans"], min_partitions=4)
+    df = salted_repartition(tables["documents_spans"])
     monkeypatch.undo()
     sizes = (
         df.withColumn("pid", F.spark_partition_id())
@@ -246,11 +246,6 @@ def test_salted_repartition_balances_pages(spark, tables, monkeypatch):
     assert total == tables["documents_spans"].select(
         F.sum(F.size("spans"))
     ).collect()[0][0]
-
-
-def test_salted_repartition_explicit_count(spark, tables):
-    df = salted_repartition(tables["documents_spans"], num_partitions=6, min_partitions=2)
-    assert df.rdd.getNumPartitions() == 6
 
 
 def test_spread_small_scan_null_keys_spread(spark):
@@ -441,7 +436,8 @@ def test_publish_snapshot_versions_extraction_output(spark, tables, tmp_path):
         publish_snapshot,
     )
 
-    docs, _ = extract_documents(spark, tables, include_poison=False)
+    clean_tables = {k: v for k, v in tables.items() if k != "documents_spans_bad"}
+    docs, _ = extract_documents(spark, clean_tables)
     docs = docs.select("id", "ocr", "span_count")
     tdir = str(tmp_path / "corpus_table")
     m1 = publish_snapshot(spark, docs, tdir)

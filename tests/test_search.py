@@ -205,43 +205,6 @@ class TestBm25:
     def _df(self, spark):
         return spark.createDataFrame(self.DOCS, ["doc_id", "text"])
 
-    def test_true_bm25_matches_pure_python(self, spark):
-        """with_bm25_score == a from-first-principles Lucene BM25
-        (idf = ln(1 + (N-df+.5)/(df+.5)), k1=1.2, b=0.75)."""
-        import math
-
-        from index_search_monorepo_spark.search.engine import (
-            with_bm25_score,
-        )
-
-        terms = ["spark", "es"]
-        toks = {d: t.split() for d, t in self.DOCS}
-        n = len(toks)
-        avgdl = sum(len(v) for v in toks.values()) / n
-        df_t = {
-            t: sum(1 for v in toks.values() if t in v) for t in terms
-        }
-
-        def ref(doc):
-            s = 0.0
-            for t in terms:
-                tf = toks[doc].count(t)
-                idf = math.log(1 + (n - df_t[t] + 0.5) / (df_t[t] + 0.5))
-                dl = len(toks[doc])
-                s += idf * (
-                    tf * 2.2 / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl))
-                )
-            return s
-
-        got = {
-            r["doc_id"]: r["bm25"]
-            for r in with_bm25_score(self._df(spark), terms).collect()
-        }
-        for d in toks:
-            assert abs(got[d] - ref(d)) < 1e-9, (d, got[d], ref(d))
-        # ranking sanity: both-terms doc 1 > one-term doc 0 > no-hit doc 2
-        assert got[1] > got[0] > got[2] == 0.0
-
     def test_e6_variant_hand_math(self, spark):
         """Integer spec check on one hand-computed document."""
         from index_search_monorepo_spark.search.engine import (

@@ -103,15 +103,12 @@ class TestMerge:
         v1 = S.read_snapshot(spark, table, version=1)
         assert v1.count() == 200
         assert v1.filter(F.col("k") == 0).collect()[0]["name"] == "name-0"
-        hist = S.table_history(table)
-        assert [h["version"] for h in hist] == [1, 2]
-        assert hist[1]["n_carried"] > 0
 
 
 class TestPruningAndGC:
     def test_probe_reads_fewer_files(self, spark, table):
-        read, total = S.pruned_file_count(table, key_between=(40, 60))
-        assert read < total
+        files = S.load_manifest(table)["files"]
+        assert len(S._prune_files(files, (40, 60))) < len(files)
         got = S.read_snapshot(spark, table, key_between=(40, 60))
         assert got.count() == 21
         assert got.agg(F.min("k"), F.max("k")).collect()[0] == (40, 60)
@@ -260,53 +257,3 @@ class TestCompaction:
         assert [f["file"] for f in m1["files"]] == [
             f["file"] for f in m0["files"]
         ]
-
-
-def test_write_audit_publish_gate(spark, tmp_path):
-    """WAP: a batch failing its declared contract never becomes a readable
-    version (refusal is a status row + a recorded audit, not an
-    exception); a clean batch publishes with its audit on file;
-    allow_failed=True publishes AND keeps the failed audit (auditable
-    override)."""
-    import json
-
-    import pandas as pd
-
-    from index_search_monorepo_spark.operators import snapshots as SNAP
-    from index_search_monorepo_spark.plans.pipeline import (
-        publish_snapshot_audited,
-    )
-
-    table = str(tmp_path / "tbl")
-    checks = [
-        {"rule_id": "id_nn", "kind": "completeness", "column": "id",
-         "min_permille": 1000},
-        {"rule_id": "nrows", "kind": "row_count", "min_rows": 2,
-         "max_rows": 1000},
-    ]
-    good = spark.createDataFrame(
-        pd.DataFrame({"id": ["a", "b", "c"], "v": [1, 2, 3]})
-    )
-    r1 = publish_snapshot_audited(spark, good, table, checks)
-    assert r1["published"] and r1["version"] == 1 and r1["failed"] == []
-    audit1 = json.loads(open(r1["audit_path"]).read())
-    assert audit1["failed"] == [] and len(audit1["rules"]) == 2
-    # bad batch: a NULL id violates completeness -> refused, version holds
-    bad = spark.createDataFrame(
-        pd.DataFrame({"id": ["d", None, "e"], "v": [4, 5, 6]})
-    )
-    r2 = publish_snapshot_audited(spark, bad, table, checks)
-    assert not r2["published"] and r2["failed"] == ["id_nn"]
-    assert SNAP.current_version(table) == 1
-    assert "refused-0001" in r2["audit_path"]
-    audit2 = json.loads(open(r2["audit_path"]).read())
-    assert audit2["failed"] == ["id_nn"] and audit2["overridden"] is False
-    # override: publishes v2, failed audit stays on record
-    r3 = publish_snapshot_audited(
-        spark, bad, table, checks, allow_failed=True
-    )
-    assert r3["published"] and r3["version"] == 2
-    assert r3["failed"] == ["id_nn"]
-    audit3 = json.loads(open(r3["audit_path"]).read())
-    assert audit3["failed"] == ["id_nn"] and audit3["overridden"]
-    assert SNAP.current_version(table) == 2

@@ -3,7 +3,7 @@
 
 from __future__ import annotations
 
-from index_search_monorepo_spark.functions.solrdoc import with_solr_xml
+from index_search_monorepo_spark.functions.solrdoc import create_solr_string_expr
 
 
 # --- oracle: direct transliteration of the reference logic -----------------
@@ -70,7 +70,8 @@ def test_solr_xml_matches_oracle(spark):
     )
     got = {
         r["id"]: r["solr_xml"]
-        for r in with_solr_xml(df, cols).select("id", "solr_xml").collect()
+        for r in df.select("id", create_solr_string_expr(df, cols).alias("solr_xml"))
+        .collect()
     }
     for d in DOCS:
         assert got[d["id"]] == oracle_create_solr_string(d), d["id"]

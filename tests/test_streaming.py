@@ -116,95 +116,6 @@ def test_incremental_resume_is_idempotent(spark, corpus_dir, tmp_path):
     assert n2 == n1 + 5
 
 
-def test_stateful_doc_assembler(spark, tmp_path):
-    """Custom stateful operator: a document split across micro-batches is
-    assembled once all expected spans arrive; state is dropped on emit and
-    spans come out in canonical (offset, media_ref) order."""
-    from index_search_monorepo_spark.streaming.incremental import (
-        CHUNK_SCHEMA,
-        stateful_doc_assembler,
-    )
-
-    import shutil
-
-    land = tmp_path / "chunks"
-    land.mkdir()
-    # batch 1: doc A part 1 of 2 (out of offset order) + doc B complete
-    b1 = [
-        ("A", [("txt", "page 3", "TXT3", 3), ("txt", "page 1", "TXT1", 1)], 4),
-        ("B", [("txt", "only 1", "T1", 1), ("img", "", "I2", 2)], 2),
-    ]
-    # batch 2: doc A part 2 of 2
-    b2 = [("A", [("txt", "page 2", "TXT2", 2), ("img", "", "IMG4", 4)], 4)]
-    for i, batch in enumerate((b1, b2)):
-        stage = tmp_path / f"stage{i}"
-        spark.createDataFrame(batch, CHUNK_SCHEMA).coalesce(1).write.parquet(
-            str(stage)
-        )
-        part = next(stage.glob("*.parquet"))
-        shutil.copy(part, land / f"chunk{i}.parquet")
-
-    stream = (
-        spark.readStream.schema(CHUNK_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(land))
-    )
-    q = (
-        stateful_doc_assembler(stream)
-        .writeStream.format("memory")
-        .queryName("assembled_docs")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = {r["doc_id"]: r for r in spark.sql("SELECT * FROM assembled_docs").collect()}
-    assert set(rows) == {"A", "B"}
-    assert rows["A"]["complete"] and rows["A"]["n_spans"] == 4
-    assert [s["offset"] for s in rows["A"]["spans"]] == [1, 2, 3, 4]
-    assert [s["media_ref"] for s in rows["A"]["spans"]] == [
-        "TXT1", "TXT2", "TXT3", "IMG4",
-    ]
-    assert rows["B"]["complete"] and rows["B"]["n_spans"] == 2
-
-
-def test_stateful_assembler_timeout_flush(spark, tmp_path):
-    """Poll-mode: a document whose remaining chunks never arrive is flushed
-    by the processing-time timeout as complete=false (DLQ-as-rows)."""
-    import time
-
-    from index_search_monorepo_spark.streaming.incremental import (
-        CHUNK_SCHEMA,
-        stateful_doc_assembler,
-    )
-
-    land = tmp_path / "chunks"
-    spark.createDataFrame(
-        [("STALLED", [("txt", "page 1", "TXT1", 1)], 3)], CHUNK_SCHEMA
-    ).coalesce(1).write.parquet(str(land))
-
-    stream = spark.readStream.schema(CHUNK_SCHEMA).parquet(str(land))
-    q = (
-        stateful_doc_assembler(stream, timeout_ms=2_000)
-        .writeStream.format("memory")
-        .queryName("asm_timeout")
-        .outputMode("append")
-        .trigger(processingTime="1 seconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 60
-        rows = []
-        while time.time() < deadline and not rows:
-            rows = spark.sql("SELECT * FROM asm_timeout").collect()
-            time.sleep(0.5)
-        assert len(rows) == 1
-        assert rows[0]["doc_id"] == "STALLED"
-        assert rows[0]["complete"] is False and rows[0]["n_spans"] == 1
-    finally:
-        q.stop()
-
-
 def test_windowed_ingest_metrics(spark, tmp_path):
     base = dt.datetime(2026, 1, 1, 12, 0, 0)
     rows = [
@@ -239,57 +150,6 @@ def test_windowed_ingest_metrics(spark, tmp_path):
     # minute3={200}. In append mode only windows strictly before the final
     # watermark (max event time 200s with 0s delay) emit: minutes 0,1,2.
     assert got == {0: (2, 4, 2), 1: (1, 2, 1), 2: (2, 4, 2)}
-
-
-def test_streaming_exact_dedup(spark, tmp_path):
-    """Incremental exact dedup: first arrival of each content hash is kept,
-    later copies within the watermark are dropped; state is bounded by the
-    watermark (dropDuplicatesWithinWatermark)."""
-    from index_search_monorepo_spark.streaming.incremental import (
-        streaming_exact_dedup,
-    )
-
-    base = dt.datetime(2026, 1, 1, 12, 0, 0)
-    mk = lambda i, text: (  # noqa: E731
-        f"doc{i}",
-        [("txt", text, f"TXT{i:08d}", 1)],
-        base + dt.timedelta(seconds=10 * i),
-    )
-    rows = [
-        mk(0, "alpha beta"),
-        mk(1, "gamma delta"),
-        mk(2, "alpha beta"),  # dup of doc0, 20s later -> dropped
-        mk(3, "epsilon"),
-        mk(4, "gamma delta"),  # dup of doc1 -> dropped
-    ]
-    src_dir = tmp_path / "dedup_landed"
-    spark.createDataFrame(rows, SPANS_SCHEMA_TS).coalesce(1).write.parquet(
-        str(src_dir)
-    )
-    stream = read_spans_stream(spark, str(src_dir), with_ts=True).select(
-        "doc_id",
-        "ingest_ts",
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.filter(F.col("spans"), lambda s: s["kind"] == F.lit("txt")),
-                lambda s: s["text"],
-            ),
-        ).alias("text_concat"),
-    )
-    q = (
-        streaming_exact_dedup(stream, watermark="10 minutes")
-        .writeStream.format("memory")
-        .queryName("stream_dedup")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    kept = {
-        r["doc_id"] for r in spark.sql("SELECT * FROM stream_dedup").collect()
-    }
-    assert kept == {"doc0", "doc1", "doc3"}
 
 
 def test_streaming_hll_sketch_parity(spark, tmp_path):

@@ -122,22 +122,22 @@ class TestIdFunctions:
 
     def test_pairtree_exprs_match_python_goldens(self, spark):
         """F6 column form (ht_document.py:63-74): parity with the
-        driver-side sources.zip_ingest implementations, incl. the golden
+        Python mirrors in oracle/reference_oracle.py, incl. the golden
         '39015051333915' path and an ark-style id with ':' '/'."""
         from index_search_monorepo_spark.functions.text import (
             pairtree_path_expr,
             pairtree_sanitize_expr,
         )
-        from index_search_monorepo_spark.sources.zip_ingest import (
-            pairtree_path,
-            pairtree_sanitize,
+        from index_search_monorepo_spark.oracle.reference_oracle import (
+            oracle_pairtree_path,
+            oracle_pairtree_sanitize,
         )
 
         vals = ["39015051333915", "ark:/13960/t4mk66f1d", "afs8435.0001.001", "7"]
         got_s = _run_expr(spark, vals, pairtree_sanitize_expr)
-        assert got_s == [pairtree_sanitize(v) for v in vals]
+        assert got_s == [oracle_pairtree_sanitize(v) for v in vals]
         got_p = _run_expr(spark, vals, pairtree_path_expr)
-        assert got_p == [pairtree_path(v) for v in vals]
+        assert got_p == [oracle_pairtree_path(v) for v in vals]
         assert got_p[0] == "/39/01/50/51/33/39/15/39015051333915"
 
     def test_zero_pad_and_strip(self, spark):

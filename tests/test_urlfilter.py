@@ -1,7 +1,6 @@
-"""URL/domain filtering (C4/RefinedWeb-style source curation): host
-extraction parity with the DuckDB oracle, label-suffix blocklist
-semantics, static-vs-relation strategy agreement, and the zero-join plan
-pin for the static path."""
+"""URL/domain features (C4/RefinedWeb-style source curation): host
+extraction parity with the DuckDB oracle, label-suffix blocklist flag
+semantics, and the zero-join plan pin for the static blocklist."""
 
 from __future__ import annotations
 
@@ -97,37 +96,27 @@ class TestHostExtraction:
         assert srows == orows
 
 
+def _kept(df, blocked):
+    """doc_ids the static blocklist flag leaves unblocked."""
+    return sorted(
+        r["doc_id"]
+        for r in U.with_url_features(df, blocked=blocked).collect()
+        if not r["url_blocked"]
+    )
+
+
 class TestBlocklist:
     def test_static_suffix_semantics(self, spark):
-        kept = sorted(
-            r["doc_id"]
-            for r in U.filter_blocked_domains(
-                _frame(spark), ["example.com", "example.org"]
-            ).collect()
-        )
+        kept = _kept(_frame(spark), ["example.com", "example.org"])
         # drops 0,1 (example.com suffix) and 2 (example.org); keeps the
         # lookalike notexample.com, the IP, and everything else
         assert kept == [3, 4, 5, 6, 7]
 
-    def test_relation_matches_static(self, spark):
-        df = _frame(spark)
-        blocked = ["example.com", "Example.ORG", "192.168.10.1"]
-        a = sorted(
-            r["doc_id"]
-            for r in U.filter_blocked_domains(df, blocked).collect()
-        )
-        bl = spark.createDataFrame([(b,) for b in blocked], ["domain"])
-        b = sorted(
-            r["doc_id"]
-            for r in U.filter_blocked_domains(df, bl).collect()
-        )
-        assert a == b == [4, 5, 6, 7]
-
     def test_static_plan_is_zero_join(self, spark):
         """The 100 TB pin: a static blocklist must compile to a pure
-        filter — no Exchange, no join operator anywhere in the plan."""
+        projection — no Exchange, no join operator anywhere in the plan."""
         plan = (
-            U.filter_blocked_domains(_frame(spark), ["example.com"])
+            U.with_url_features(_frame(spark), blocked=["example.com"])
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
@@ -136,16 +125,14 @@ class TestBlocklist:
         assert "Join" not in plan, plan
 
     def test_empty_static_list_keeps_all(self, spark):
-        assert U.filter_blocked_domains(_frame(spark), []).count() == len(
-            URLS
-        )
+        assert _kept(_frame(spark), []) == [i for i, _ in URLS]
 
 
 class TestNullUrl:
     def test_null_url_rows_survive_static_filter(self, spark):
         """Review finding: NULL url made the blocked flag NULL and
-        filter(~NULL) silently dropped the row; both strategies must
-        keep null-URL docs and agree."""
+        filter(~NULL) silently dropped the row; a null-URL doc is
+        unblocked."""
         from pyspark.sql.types import (
             LongType, StringType, StructField, StructType,
         )
@@ -159,16 +146,7 @@ class TestNullUrl:
              (2, "https://ok.example.org/b")],
             schema,
         )
-        a = sorted(
-            r["doc_id"]
-            for r in U.filter_blocked_domains(df, ["blocked.com"]).collect()
-        )
-        bl = spark.createDataFrame([("blocked.com",)], ["domain"])
-        b = sorted(
-            r["doc_id"]
-            for r in U.filter_blocked_domains(df, bl).collect()
-        )
-        assert a == b == [0, 2]
+        assert _kept(df, ["blocked.com"]) == [0, 2]
         feats = {
             r["doc_id"]: (r["url_host"], r["url_blocked"])
             for r in U.with_url_features(

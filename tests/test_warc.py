@@ -1,7 +1,6 @@
 """WARC source (sources/warc.py): reader round-trips for both layouts
-(gzip-membered and plain), error-envelope rows for malformed records, the
-distributed scan + documents projection, and the round-trip gate kernel
-against its DuckDB oracle fragments."""
+(gzip-membered and plain), error-envelope rows for malformed records, and
+the round-trip gate kernel against its DuckDB oracle fragments."""
 
 from __future__ import annotations
 
@@ -96,52 +95,6 @@ class TestReader:
         assert out["http_status"] is None
 
 
-class TestScan:
-    def test_scan_and_documents(self, spark, tmp_path):
-        for i in range(3):
-            (tmp_path / f"crawl-{i}.warc.gz").write_bytes(
-                W.build_warc(_sample_records())
-            )
-        df = W.warc_scan(spark, str(tmp_path / "*.warc.gz"))
-        rows = df.collect()
-        assert len(rows) == 9
-        assert set(df.columns) == set(W.WARC_RECORD_SCHEMA.fieldNames())
-        assert {r["warc_type"] for r in rows} == {
-            "warcinfo",
-            "response",
-            "request",
-        }
-        docs = W.warc_to_documents(df).collect()
-        assert len(docs) == 3
-        assert all(d["doc_id"] == "http://ex.org/a" for d in docs)
-        assert all(
-            d["text"] == "hello world this is a long enough block of text"
-            for d in docs
-        )
-
-    def test_non_200_and_non_html_drop_from_documents(self, spark, tmp_path):
-        recs = [
-            W.build_warc_record(
-                "response",
-                W.http_response_bytes(404, b"<html><p>gone</p></html>"),
-                target_uri="http://ex.org/x",
-                content_type="application/http;msgtype=response",
-            ),
-            W.build_warc_record(
-                "response",
-                W.http_response_bytes(
-                    200, b"{}", content_type="application/json"
-                ),
-                target_uri="http://ex.org/y",
-                content_type="application/http;msgtype=response",
-            ),
-        ]
-        (tmp_path / "c.warc.gz").write_bytes(W.build_warc(recs))
-        df = W.warc_scan(spark, str(tmp_path / "c.warc.gz"))
-        assert df.count() == 2
-        assert W.warc_to_documents(df).count() == 0
-
-
 class TestGateKernel:
     def test_kernel_matches_oracle_fragments(self, spark):
         """The warc_roundtrip_udf values equal the DuckDB oracle fragments
@@ -190,35 +143,3 @@ class TestGateKernel:
         row = sdf.select("_w.warc_extract_md5").collect()[0]
         norm = "spaced out text here ok thanks"
         assert row[0] == hashlib.md5(norm.encode()).hexdigest()
-
-
-class TestStreamScan:
-    def test_incremental_files_flow_through(self, spark, tmp_path):
-        src = tmp_path / "in"
-        src.mkdir()
-        (src / "a.warc.gz").write_bytes(W.build_warc(_sample_records()))
-        stream = W.warc_stream_scan(spark, str(src))
-        assert stream.isStreaming
-        docs = W.warc_to_documents(stream)
-        out = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-
-        def run_once():
-            q = (
-                docs.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-
-        run_once()
-        assert spark.read.parquet(out).count() == 1
-        # a second file lands -> ONLY the new one processes (file-source
-        # checkpoint = exactly once per file)
-        (src / "b.warc.gz").write_bytes(W.build_warc(_sample_records()))
-        run_once()
-        got = spark.read.parquet(out)
-        assert got.count() == 2
-        assert got.select("text").distinct().count() == 1
